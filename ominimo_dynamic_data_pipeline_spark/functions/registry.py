@@ -14,6 +14,7 @@ Functions may take params from the field config:
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
 from typing import Any, Callable, Mapping
 
 from pyspark.sql import Column
@@ -31,6 +32,14 @@ def register_function(name: str) -> Callable[[FunctionBuilder], FunctionBuilder]
         return fn
 
     return deco
+
+
+def frozen_clock() -> Column:
+    """The current instant as a timestamp literal.  A dataflow compiles
+    it once and hands it to every clock function, so all actions of one
+    run (each sink write re-plans the frame) see the same time —
+    ``F.current_timestamp()`` is resolved per query instead."""
+    return F.lit(datetime.now(timezone.utc))
 
 
 @register_function("current_timestamp")

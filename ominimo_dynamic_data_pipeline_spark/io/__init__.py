@@ -1,4 +1,4 @@
 from ominimo_dynamic_data_pipeline_spark.io.reader import read_source, read_sources
-from ominimo_dynamic_data_pipeline_spark.io.writer import write_sink, write_sinks
+from ominimo_dynamic_data_pipeline_spark.io.writer import sink_groups, sink_paths, write_sink
 
-__all__ = ["read_source", "read_sources", "write_sink", "write_sinks"]
+__all__ = ["read_source", "read_sources", "sink_groups", "sink_paths", "write_sink"]

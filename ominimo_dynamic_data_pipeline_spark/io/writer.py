@@ -20,7 +20,7 @@ Improvements for scale:
 
 from __future__ import annotations
 
-from typing import Any, Mapping
+from typing import Any, Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,11 +36,15 @@ def flatten_arrays_for_csv(df: DataFrame) -> DataFrame:
     return out
 
 
+def sink_paths(sink: Mapping[str, Any]) -> list[str]:
+    return list(sink.get("paths") or [sink["path"]])
+
+
 def write_sink(df: DataFrame, sink: Mapping[str, Any]) -> None:
     """Write ``df`` per sink spec to every path in ``paths``."""
     fmt = str(sink.get("format", "parquet")).strip().lower()
     mode = str(sink.get("saveMode", "overwrite")).strip().lower()
-    paths = sink.get("paths") or [sink["path"]]
+    paths = sink_paths(sink)
     options = dict(sink.get("options") or {})
     partition_by = sink.get("partitionBy") or []
     num_files = sink.get("repartition")
@@ -214,11 +218,20 @@ def write_sink(df: DataFrame, sink: Mapping[str, Any]) -> None:
         writer.format(fmt).save(path)
 
 
-def write_sinks(
-    dataflow: Mapping[str, Any], frames: Mapping[str, DataFrame]
-) -> None:
-    for sink in dataflow.get("sinks", []):
-        name = sink["input"]
-        if name not in frames:
-            raise KeyError(f"Sink input frame not found: {name!r}")
-        write_sink(frames[name], sink)
+def sink_groups(sinks: Sequence[Mapping[str, Any]]) -> list[list[Mapping[str, Any]]]:
+    """Partition ``sinks`` into independent write groups.  Sinks that
+    share an output path or table land in one group, in declaration order
+    (an overwrite followed by an append must stay in that order); distinct
+    groups touch disjoint outputs and may be written concurrently."""
+    groups: list[tuple[set[str], list[int]]] = []
+    for i, sink in enumerate(sinks):
+        keys = {f"path:{str(p).rstrip('/')}" for p in sink_paths(sink)}
+        if sink.get("table"):
+            keys.add(f"table:{sink['table']}")
+        joined = [g for g in groups if g[0] & keys]
+        for g in joined:
+            groups.remove(g)
+            keys |= g[0]
+        groups.append((keys, sorted(j for g in joined for j in g[1]) + [i]))
+    groups.sort(key=lambda g: g[1][0])
+    return [[sinks[i] for i in members] for _, members in groups]

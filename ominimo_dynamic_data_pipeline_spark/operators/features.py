@@ -535,6 +535,8 @@ def rfm_segments(
     # F.ntile(n).over(Window.orderBy(metric, user)) — pinned in tests.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from ominimo_dynamic_data_pipeline_spark.llm.dedup import (
         persist_tracked,
     )
@@ -556,8 +558,15 @@ def rfm_segments(
             slim, n_buckets, [order, F.asc(user_col)], out_col=out_col
         ).select(user_col, out_col)
 
+    # one inheritable wrapper per branch: each copies the caller's job
+    # group and tags into its own pool thread
+    spark = f.sparkSession
     with ThreadPoolExecutor(max_workers=len(specs)) as pool:
-        buckets = list(pool.map(branch, specs))
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(branch), spec)
+            for spec in specs
+        ]
+    buckets = [fut.result() for fut in futures]
     b = f
     for part in buckets:
         b = b.join(part, user_col)

@@ -43,10 +43,24 @@ class StatsRequest:
 
 
 @dataclass
+class ValidateOutputs:
+    """What a validate step leaves for the run phase: its OK/KO frames,
+    the upstream frame both are filtered from, and every error label its
+    rules can emit (rule order, de-duplicated)."""
+
+    upstream: DataFrame
+    ok: DataFrame
+    ko: DataFrame
+    labels: list[str]
+
+
+@dataclass
 class CompileContext:
     spark: SparkSession
     frames: dict[str, DataFrame] = field(default_factory=dict)
     deferred_stats: list[StatsRequest] = field(default_factory=list)
+    # OK/KO output name -> the validate step that produced it
+    validated: dict[str, ValidateOutputs] = field(default_factory=dict)
     clock: Column | None = None  # fixed-clock override for determinism
     strict: bool = True
     register_views: bool = True
@@ -129,11 +143,14 @@ def _op_validate(ctx: CompileContext, step: Mapping[str, Any]) -> None:
     in_name = params["input"]
     ok_name = params.get("ok_output", f"{step['name']}_ok")
     ko_name = params.get("ko_output", f"{step['name']}_ko")
+    upstream = ctx.get(in_name)
     result = validate.apply_validations(
-        ctx.get(in_name), params.get("validations", []), strict=ctx.strict
+        upstream, params.get("validations", []), strict=ctx.strict
     )
     ctx.put(ok_name, result.ok)
     ctx.put(ko_name, result.ko)
+    outputs = ValidateOutputs(upstream, result.ok, result.ko, result.labels)
+    ctx.validated[ok_name] = ctx.validated[ko_name] = outputs
 
 
 @register_operator("compute_stats")

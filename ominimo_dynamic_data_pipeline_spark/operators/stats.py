@@ -12,6 +12,11 @@ Exact ``countDistinct`` per field forces an expand+shuffle per distinct
 aggregate; ``approx=True`` switches to ``approx_count_distinct`` (HLL,
 single pass, mergeable) — the recommended mode at scale.
 
+``validation_stats`` comes from dedicated jobs (compute_validation_stats)
+or, when the OK and KO frames are sink writes, from observation metrics
+riding those writes (observe_validation_stats); both build the same
+document.
+
 Document shape (parity with reference):
   {total_records, fields: {f: {null_count, non_null_count, distinct_count,
    min/max | min_date/max_date, null_percentage}}, validation_stats?: {...},
@@ -133,6 +138,22 @@ def observe_field_stats(
     return observed, finish
 
 
+def _validation_doc(
+    ok_count: int, ko_count: int, top_errors: list[dict[str, Any]] | None
+) -> dict[str, Any]:
+    total = ok_count + ko_count
+    stats: dict[str, Any] = {
+        "total_records": total,
+        "valid_records": ok_count,
+        "rejected_records": ko_count,
+        "validation_pass_rate": (ok_count / total * 100) if total else 0,
+        "validation_fail_rate": (ko_count / total * 100) if total else 0,
+    }
+    if top_errors is not None:
+        stats["top_validation_errors"] = top_errors
+    return stats
+
+
 def compute_validation_stats(
     ok_df: DataFrame, ko_df: DataFrame, top_k: int | None = None
 ) -> dict[str, Any]:
@@ -145,14 +166,7 @@ def compute_validation_stats(
     """
     ok_count = ok_df.count()
     ko_count = ko_df.count()
-    total = ok_count + ko_count
-    stats: dict[str, Any] = {
-        "total_records": total,
-        "valid_records": ok_count,
-        "rejected_records": ko_count,
-        "validation_pass_rate": (ok_count / total * 100) if total else 0,
-        "validation_fail_rate": (ko_count / total * 100) if total else 0,
-    }
+    top = None
     if ko_count > 0 and ERRORS_COL in ko_df.columns:
         ranked = (
             ko_df.select(F.explode(F.col(ERRORS_COL)).alias("error"))
@@ -162,10 +176,51 @@ def compute_validation_stats(
         )
         if top_k:
             ranked = ranked.limit(top_k)
-        stats["top_validation_errors"] = [
-            {"error": r["error"], "count": r["count"]} for r in ranked.collect()
-        ]
-    return stats
+        top = [{"error": r["error"], "count": r["count"]} for r in ranked.collect()]
+    return _validation_doc(ok_count, ko_count, top)
+
+
+def _label_hits(label: str):
+    return F.sum(F.size(F.filter(F.col(ERRORS_COL), lambda e: e == label)))
+
+
+def observe_validation_stats(
+    ok_df: DataFrame, ko_df: DataFrame, labels: Sequence[str]
+):
+    """compute_validation_stats as observation metrics on the OK and KO
+    sink writes: no count job, no explode/groupBy job.
+
+    ``labels`` must hold every label ``validation_errors`` can contain
+    (the validate step knows them).  The KO write counts each label as
+    ``sum(size(filter(errors, e -> e = label)))`` — the explode count,
+    duplicates included — and the driver ranks the non-zero counts the
+    way the dedicated path orders them (count desc, label asc).
+
+    Returns ``(ok_observed, ko_observed, finish)``: write both frames,
+    then call ``finish()`` for the same document compute_validation_stats
+    builds.
+    """
+    from pyspark.sql import Observation
+
+    ok_obs, ko_obs = Observation(), Observation()
+    rows = F.count(F.lit(1)).alias("__rows")
+    hits = [_label_hits(label).alias(f"__e{i}") for i, label in enumerate(labels)]
+    ok_observed = ok_df.observe(ok_obs, rows)
+    ko_observed = ko_df.observe(ko_obs, rows, *hits)
+
+    def finish() -> dict[str, Any]:
+        ko = ko_obs.get
+        top = None
+        if ko["__rows"] > 0:
+            counts = [(lab, ko[f"__e{i}"]) for i, lab in enumerate(labels)]
+            ranked = sorted(
+                ((lab, n) for lab, n in counts if n > 0),
+                key=lambda t: (-t[1], t[0]),
+            )
+            top = [{"error": lab, "count": n} for lab, n in ranked]
+        return _validation_doc(ok_obs.get["__rows"], ko["__rows"], top)
+
+    return ok_observed, ko_observed, finish
 
 
 def write_stats_sidecar(

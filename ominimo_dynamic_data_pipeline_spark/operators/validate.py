@@ -25,7 +25,7 @@ tagged frame (see ``ValidationResult.tagged``).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 from typing import Any, Callable, Mapping, Sequence
 
@@ -219,22 +219,22 @@ class ValidationResult:
     tagged: DataFrame  # original columns + is_valid + validation_errors
     ok: DataFrame  # passing rows, bookkeeping columns removed
     ko: DataFrame  # failing rows + validation_errors
+    # every label the rules can put in validation_errors, in rule order,
+    # de-duplicated (two checks may share one label)
+    labels: list[str] = field(default_factory=list)
 
 
-def tag_validations(
-    df: DataFrame, rules: Sequence[Mapping[str, Any]], strict: bool = True
-) -> DataFrame:
-    """Add ``is_valid`` and ``validation_errors`` in a single projection.
+def _compile_rules(
+    rules: Sequence[Mapping[str, Any]], strict: bool
+) -> list[tuple[Column, str]]:
+    return [
+        build_check(rule["field"], check, strict=strict)
+        for rule in rules
+        for check in rule.get("validations") or []
+    ]
 
-    Validity is the conjunction of every (field, check) condition; the errors
-    array holds the label of every failing check, in rule order.
-    """
-    compiled: list[tuple[Column, str]] = []
-    for rule in rules:
-        field = rule["field"]
-        for check in rule.get("validations") or []:
-            compiled.append(build_check(field, check, strict=strict))
 
+def _tag(df: DataFrame, compiled: Sequence[tuple[Column, str]]) -> DataFrame:
     if not compiled:
         return df.withColumn(VALID_COL, F.lit(True)).withColumn(
             ERRORS_COL, F.array().cast("array<string>")
@@ -245,6 +245,17 @@ def tag_validations(
         F.array(*[F.when(~cond, F.lit(label)) for cond, label in compiled])
     )
     return df.withColumn(VALID_COL, is_valid).withColumn(ERRORS_COL, errors)
+
+
+def tag_validations(
+    df: DataFrame, rules: Sequence[Mapping[str, Any]], strict: bool = True
+) -> DataFrame:
+    """Add ``is_valid`` and ``validation_errors`` in a single projection.
+
+    Validity is the conjunction of every (field, check) condition; the errors
+    array holds the label of every failing check, in rule order.
+    """
+    return _tag(df, _compile_rules(rules, strict))
 
 
 def apply_validations(
@@ -263,9 +274,11 @@ def apply_validations(
         empty = df.limit(0).withColumn(ERRORS_COL, F.array().cast("array<string>"))
         return ValidationResult(tagged=df, ok=df, ko=empty)
 
-    tagged = tag_validations(df, rules, strict=strict)
+    compiled = _compile_rules(rules, strict)
+    tagged = _tag(df, compiled)
     if cache_tagged:
         tagged = tagged.cache()
     ok = tagged.filter(F.col(VALID_COL)).drop(VALID_COL, ERRORS_COL)
     ko = tagged.filter(~F.col(VALID_COL)).drop(VALID_COL)
-    return ValidationResult(tagged=tagged, ok=ok, ko=ko)
+    labels = list(dict.fromkeys(label for _, label in compiled))
+    return ValidationResult(tagged=tagged, ok=ok, ko=ko, labels=labels)

@@ -10,25 +10,67 @@ This fixes the reference's eager ``compute_stats`` firing jobs
 mid-interpretation (``/root/reference/src/transformations.py:342-373``) and
 its debug ``count()+show()`` on the hot path (``main.py:131-145``), which
 are gated behind ``verbose`` here.
+
+One run is one snapshot.  ``current_timestamp`` / ``current_date`` resolve
+to one literal per compile (unless a ``clock`` is injected), so every sink
+carries the same ``ingestion_dt``, and each source is scanned once.
+
+The run phase executes only the actions that cannot ride another action:
+
+* every sink write; sinks sharing an output path or table form ONE action
+  and are written in declaration order;
+* a stats request's dedicated aggregate job, unless its numbers ride a
+  sink write as ``Observation`` metrics: ``mode: observe`` field stats,
+  and the OK/KO validation stats of a validate step whose OK and KO
+  outputs are both sink inputs (counts plus one per-label error sum on
+  the KO write, replacing two count jobs and the explode/groupBy job).
+
+A frame that more than one action reads is cached once, in compile
+order, before any action starts.  A validate step's OK and KO outputs
+count as reads of the step's input (both are filters over it), so the
+motor dataflow caches exactly one frame, its validate input, and the
+exact field-stats job reads the same cache.  The actions are then
+submitted together from one thread pool as wide as the number of
+actions; each thread target is wrapped in ``inheritable_thread_target``,
+so the caller's job group and tags reach every job.
+
+Failure contract: the run waits for every submitted action, unpersists
+its caches, then re-raises the first failing action's error (in
+submission order).  No Spark job of the run is left running.  Sinks that
+finished keep their output (writes are not staged), and no stats sidecar
+is written.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime
-from typing import Any, Callable, Mapping
+from functools import partial
+from typing import Any, Callable, Mapping, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from ominimo_dynamic_data_pipeline_spark.io import read_sources, write_sinks
+from ominimo_dynamic_data_pipeline_spark.functions.registry import frozen_clock
+from ominimo_dynamic_data_pipeline_spark.io import (
+    read_sources,
+    sink_groups,
+    sink_paths,
+    write_sink,
+)
 from ominimo_dynamic_data_pipeline_spark.operators.registry import (
     CompileContext,
+    StatsRequest,
+    ValidateOutputs,
     apply_transformations,
 )
 from ominimo_dynamic_data_pipeline_spark.operators.stats import (
     compute_field_stats,
     compute_validation_stats,
     observe_field_stats,
+    observe_validation_stats,
     write_stats_sidecar,
 )
 
@@ -62,6 +104,8 @@ def compile_dataflow(
     ``input_path_override`` replaces the FIRST source's path (reference CLI
     contract, ``main.py:111-117``) but without mutating the metadata — the
     binding is explicit and the metadata document stays immutable.
+    ``clock`` defaults to the compile instant as one literal, shared by
+    every action of the run.
     """
     flow: dict[str, Any] = dict(dataflow)
     if input_path_override is not None and flow.get("sources"):
@@ -69,6 +113,8 @@ def compile_dataflow(
         sources[0]["path"] = input_path_override
         flow["sources"] = sources
 
+    if clock is None:
+        clock = frozen_clock()
     ctx = CompileContext(spark=spark, clock=clock, strict=strict)
     for name, df in read_sources(spark, flow).items():
         ctx.put(name, df)
@@ -76,16 +122,62 @@ def compile_dataflow(
     return CompiledDataflow(dataflow=flow, ctx=ctx)
 
 
-def _finalize_stats_doc(doc, req, ctx, result, stats_clock) -> None:
-    """Attach validation stats, write the sidecar, record on the result."""
-    if req.include_validation_stats and req.ok_input and req.ko_input:
-        ok = ctx.frames.get(req.ok_input)
-        ko = ctx.frames.get(req.ko_input)
-        if ok is not None and ko is not None:
-            doc["validation_stats"] = compute_validation_stats(ok, ko)
-    write_stats_sidecar(doc, req.stats_name, req.output_path, stats_clock)
-    doc["stats_name"] = req.stats_name
-    result.stats[req.stats_name] = doc
+def _foldable_validation(
+    ctx: CompileContext, req: StatsRequest, written: set[str]
+) -> ValidateOutputs | None:
+    """The validate step whose OK and KO outputs are ``req``'s ok/ko
+    inputs, when both are written by a sink — its validation stats can
+    then ride those two writes."""
+    ok_step = ctx.validated.get(req.ok_input)
+    ko_step = ctx.validated.get(req.ko_input)
+    if ok_step is None or ko_step is None:
+        return None
+    if not {req.ok_input, req.ko_input} <= written:
+        return None
+    if ctx.frames[req.ok_input] is not ok_step.ok:
+        return None
+    if ctx.frames[req.ko_input] is not ko_step.ko:
+        return None
+    return ko_step
+
+
+def _shared_frames(ctx: CompileContext, reads: Sequence[str]) -> list[DataFrame]:
+    """Frames read by more than one action, in compile order.  A validate
+    output's read counts against the validate step's input frame."""
+
+    def source(name: str) -> DataFrame:
+        df = ctx.frames[name]
+        step = ctx.validated.get(name)
+        if step is not None and (df is step.ok or df is step.ko):
+            return step.upstream
+        return df
+
+    uses = Counter(id(source(name)) for name in reads)
+    in_order = [*ctx.frames.values(), *(s.upstream for s in ctx.validated.values())]
+    shared: dict[int, DataFrame] = {}
+    for df in in_order:
+        if uses[id(df)] > 1:
+            shared.setdefault(id(df), df)
+    return list(shared.values())
+
+
+def _run_together(spark: SparkSession, actions: Sequence[Callable[[], Any]]) -> list:
+    """Submit every action at once, wait for all of them, then return
+    their results or raise the first error (in submission order)."""
+    if not actions:
+        return []
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        # one wrapper per action: each copies the caller's local
+        # properties (job group, tags) into its own thread
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn)) for fn in actions
+        ]
+    return [f.result() for f in futures]
+
+
+def _write_group(group: Sequence[Mapping[str, Any]], frames: Mapping[str, DataFrame]) -> None:
+    for sink in group:
+        write_sink(frames[sink["input"]], sink)
 
 
 def run_dataflow(
@@ -94,78 +186,80 @@ def run_dataflow(
     verbose: bool = False,
     stats_clock: Callable[[], datetime] = datetime.now,
 ) -> RunResult:
-    """Execute the deferred actions of a compiled dataflow."""
+    """Execute the deferred actions of a compiled dataflow (see the
+    module docstring for which actions run and the failure contract)."""
     ctx = compiled.ctx
     result = RunResult(frames=ctx.frames)
+    sinks = list(compiled.dataflow.get("sinks", []) or [])
+    written = {s["input"] for s in sinks} if write else set()
+    missing = written - ctx.frames.keys()
+    if missing:
+        raise KeyError(f"Sink input frame not found: {sorted(missing)[0]!r}")
+    # what each sink writes: stats riding a write swap in an observed twin
+    write_frames = dict(ctx.frames)
 
-    # mode="observe" stats ride along with the sink write: swap the sink's
-    # input frame for the observed twin, collect metrics after the write.
-    # Only valid when a sink action will actually consume the frame —
-    # otherwise fall back to the dedicated-job path (with approx distinct
-    # counts either way, so the stats document is mode-stable across runs).
-    sink_inputs = {
-        s["input"] for s in compiled.dataflow.get("sinks", []) or []
-    }
+    actions: list[Callable[[], Any]] = []
+    reads: list[str] = []  # frame name of every read by an action
+    outcomes: list[Any] = []
 
-    def observable(req) -> bool:
-        return (
-            req.mode == "observe" and write and req.input_name in sink_inputs
-        )
+    def action(fn: Callable[[], Any], *names: str) -> Callable[[], Any]:
+        slot = len(actions)
+        actions.append(fn)
+        reads.extend(names)
+        return lambda: outcomes[slot]
 
-    # Cache frames that are consumed by multiple downstream actions
-    # (stats + sinks + debug counts) so the validation plan runs once.
-    # Observed stats requests add NO extra action on their input — caching
-    # them would persist the full sink dataset for a single consumer,
-    # defeating observe's zero-extra-cost point — so they are excluded
-    # unless something else (ok/ko stats) also reads the frame.
-    multi_use = {
-        req.input_name for req in ctx.deferred_stats if not observable(req)
-    }
+    docs = []
     for req in ctx.deferred_stats:
-        multi_use |= {n for n in (req.ok_input, req.ko_input) if n}
-    cached = []
-    if write or verbose:
-        for name in multi_use:
-            if name in ctx.frames:
-                ctx.frames[name] = ctx.frames[name].cache()
-                cached.append(ctx.frames[name])
-
-    observed_finishes: list[tuple[Any, Callable[[], dict[str, Any]]]] = []
-
-    try:
-        for req in ctx.deferred_stats:
-            if observable(req):
-                observed, finish = observe_field_stats(
-                    ctx.get(req.input_name), req.fields
+        name = req.input_name
+        if req.mode == "observe" and name in written:
+            write_frames[name], fields_doc = observe_field_stats(
+                write_frames[name], req.fields
+            )
+        else:
+            # observe-mode requests always report HLL distinct counts;
+            # keep the fallback consistent with the observed path
+            approx = req.approx or req.mode == "observe"
+            fields_doc = action(
+                partial(compute_field_stats, ctx.get(name), req.fields, approx),
+                name,
+            )
+        validation_doc = None
+        ok, ko = req.ok_input, req.ko_input
+        if req.include_validation_stats and ok in ctx.frames and ko in ctx.frames:
+            step = _foldable_validation(ctx, req, written)
+            if step is not None:
+                write_frames[ok], write_frames[ko], validation_doc = (
+                    observe_validation_stats(
+                        write_frames[ok], write_frames[ko], step.labels
+                    )
                 )
-                ctx.frames[req.input_name] = observed
-                observed_finishes.append((req, finish))
-                continue
-            doc = compute_field_stats(
-                ctx.get(req.input_name),
-                req.fields,
-                # observe-mode requests always report HLL distinct counts;
-                # keep the fallback consistent with the observed path
-                approx=req.approx or req.mode == "observe",
+            else:
+                validation_doc = action(
+                    partial(compute_validation_stats, ctx.frames[ok], ctx.frames[ko]),
+                    ok,
+                    ko,
+                )
+        docs.append((req, fields_doc, validation_doc))
+
+    if write:
+        for group in sink_groups(sinks):
+            action(
+                partial(_write_group, group, write_frames),
+                *(s["input"] for s in group for _ in sink_paths(s)),
             )
-            _finalize_stats_doc(
-                doc, req, ctx, result, stats_clock
-            )
 
-        if verbose:
-            for sink in compiled.dataflow.get("sinks", []) or []:
-                name = sink["input"]
-                if name in ctx.frames:
-                    result.counts[name] = ctx.frames[name].count()
-                    ctx.frames[name].show(truncate=False)
-
-        if write:
-            write_sinks(compiled.dataflow, ctx.frames)
-
-        for req, finish in observed_finishes:
-            _finalize_stats_doc(finish(), req, ctx, result, stats_clock)
+    shown = [s["input"] for s in sinks if s["input"] in ctx.frames] if verbose else []
+    # each shown frame is read twice (count + show)
+    shared = _shared_frames(ctx, reads + shown * 2)
+    for df in shared:
+        df.cache()
+    try:
+        for name in shown:
+            result.counts[name] = ctx.frames[name].count()
+            ctx.frames[name].show(truncate=False)
+        outcomes.extend(_run_together(ctx.spark, actions))
     finally:
-        for df in cached:
+        for df in shared:
             df.unpersist()
         # Dedup steps persist intermediates under the one-generation-per-
         # operator registry; a dataflow run is their natural release
@@ -176,6 +270,14 @@ def run_dataflow(
         )
 
         release_persisted()
+
+    for req, fields_doc, validation_doc in docs:
+        doc = fields_doc()
+        if validation_doc is not None:
+            doc["validation_stats"] = validation_doc()
+        write_stats_sidecar(doc, req.stats_name, req.output_path, stats_clock)
+        doc["stats_name"] = req.stats_name
+        result.stats[req.stats_name] = doc
     return result
 
 

@@ -297,3 +297,37 @@ def test_sql_step_binds_named_parameters(spark, tmp_path):
         r["policy_number"] for r in compiled.frames["filtered"].collect()
     }
     assert got == {"P-20009", "P-20010"}
+
+
+@pytest.mark.parametrize(
+    "flow_name, fixture, fmt",
+    [
+        ("motor-ingestion", "motor_policies.json", "json"),
+        ("motor-ingestion-csv", "motor_policies.csv", "csv"),
+    ],
+)
+def test_one_run_clock_shared_by_ok_and_ko(spark, metadata, tmp_path, flow_name, fixture, fmt):
+    """Without an injected clock, current_timestamp still resolves once
+    per compile: the OK and KO writes (separate queries) carry one
+    shared ingestion_dt."""
+    flow = select_dataflow(metadata, flow_name)
+    compiled = compile_dataflow(
+        spark, flow, input_path_override=str(REPO / "tests/data" / fixture)
+    )
+    compiled.dataflow = {
+        **compiled.dataflow,
+        "sinks": [
+            {**s, "paths": [str(tmp_path / f"sink_{i}")]}
+            for i, s in enumerate(compiled.dataflow["sinks"])
+        ],
+    }
+    for req in compiled.ctx.deferred_stats:
+        req.output_path = str(tmp_path / "stats")
+    run_dataflow(compiled, write=True)
+
+    reader = spark.read.option("header", "true") if fmt == "csv" else spark.read
+    stamps = set()
+    for i in range(2):
+        out = reader.format(fmt).load(str(tmp_path / f"sink_{i}"))
+        stamps |= {r["ingestion_dt"] for r in out.select("ingestion_dt").collect()}
+    assert len(stamps) == 1 and None not in stamps

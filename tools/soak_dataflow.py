@@ -57,14 +57,17 @@ def main() -> None:
     flow = next(d for d in meta["dataflows"] if d["name"] == flow_name)
     for src in flow.get("sources", []):
         src["path"] = f"{sf_dir}/documents.parquet"
+    # keep each path's full relative form: distinct sinks (OK and KO
+    # share a basename) must stay distinct directories, since the run
+    # phase writes them concurrently
     for sink in flow.get("sinks", []) or []:
         sink["paths"] = [
-            str(scratch / Path(p).name) for p in sink.get("paths", [])
+            str(scratch / str(p).lstrip("/")) for p in sink.get("paths", [])
         ]
     for step in flow.get("transformations", []):
         p = step.get("params") or {}
         if "output_path" in p:
-            p["output_path"] = str(scratch / "stats")
+            p["output_path"] = str(scratch / str(p["output_path"]).lstrip("/"))
 
     spark = get_spark(
         app_name=f"soak_dataflow_{flow_name}",
@@ -97,9 +100,8 @@ def main() -> None:
     for sink in flow.get("sinks", []) or []:
         for p in sink["paths"]:
             try:
-                rec["sink_rows"][Path(p).name] = spark.read.parquet(
-                    p
-                ).count()
+                key = str(Path(p).relative_to(scratch))
+                rec["sink_rows"][key] = spark.read.parquet(p).count()
             except Exception:
                 pass
     rec["stats_docs"] = sorted(result.stats.keys()) if getattr(
