@@ -1,8 +1,8 @@
 # One-command regression gate: `make check` = full test suite (incl. the
-# full-catalog DuckDB oracle gate) + a 6-query mini-bench at sf0.01 + the
+# full-catalog DuckDB oracle gate) + a 7-query mini-bench at sf0.01 + the
 # leak/copy self-check.  Individual targets below for faster loops.
 
-MINIBENCH_QUERIES = q01_pricing_summary,q26_minhash_near_dups,q30_knn_lsh,q50_validated_lineitem,q101_streaming_tumbling_e2e,q110_bm25_retrieval
+MINIBENCH_QUERIES = q01_pricing_summary,q26_minhash_near_dups,q30_knn_lsh,q50_validated_lineitem,q101_streaming_tumbling_e2e,q110_bm25_retrieval,q141_streaming_dedup_e2e
 
 .PHONY: check test minibench selfcheck oracle bench sweep-sf1
 

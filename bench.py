@@ -205,6 +205,11 @@ def main() -> None:
             for st in stream_ops.LAST_RUN_STATS.values():
                 for k in agg:
                     agg[k] = round(agg[k] + st.get(k, 0), 3)
+            # a store count is a width, not a cost: keep the widest
+            agg["state_store_instances"] = max(
+                st.get("state_store_instances", 0)
+                for st in stream_ops.LAST_RUN_STATS.values()
+            )
             # results are consumed — drop this query's sink/checkpoint
             # scratch NOW, outside the timed window.  Round-10 measured
             # the late-session streaming drag to be exactly this

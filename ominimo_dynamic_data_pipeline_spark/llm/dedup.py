@@ -187,23 +187,31 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
+def _ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier: backtick-wrapped, embedded
+    backticks doubled, so a caller-supplied column name cannot break out
+    of a rendered expression."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _tokens_sql(src: str) -> str:
     """Spark-SQL rendering of text.tokens() over column ``src`` (same
     expression tree; construction-latency note at _md5_long_sql)."""
-    norm = f"regexp_replace(trim(lower(`{src}`)), '\\\\s+', ' ')"
+    norm = f"regexp_replace(trim(lower({_ident(src)})), '\\\\s+', ' ')"
     return f"filter(split({norm}, '\\\\s+'), t -> t != '')"
 
 
 def _shingles_sql(toks: str, n: int) -> str:
     """Spark-SQL rendering of shingles_from_tokens over attribute
     ``toks`` (same expression tree; see _md5_long_sql)."""
-    parts = ", ".join(f"element_at(`{toks}`, i + {j + 1})" for j in range(n))
+    t = _ident(toks)
+    parts = ", ".join(f"element_at({t}, i + {j + 1})" for j in range(n))
     grams = (
-        f"transform(sequence(0, greatest(size(`{toks}`) - {n}, -1)),"
+        f"transform(sequence(0, greatest(size({t}) - {n}, -1)),"
         f" i -> concat_ws(' ', {parts}))"
     )
     return (
-        f"array_distinct(CASE WHEN size(`{toks}`) >= {n} THEN {grams}"
+        f"array_distinct(CASE WHEN size({t}) >= {n} THEN {grams}"
         f" ELSE cast(array() as array<string>) END)"
     )
 
@@ -225,10 +233,10 @@ def shingle_frame(
     SQL-rendered ladders (construction-latency note at _md5_long_sql);
     plans pinned identical to the Column-built form in tests."""
     toks = df.selectExpr(
-        f"`{id_col}`", f"{_tokens_sql(text_col)} AS toks"
+        _ident(id_col), f"{_tokens_sql(text_col)} AS toks"
     ).filter(F.size(F.col("toks")) >= n)
     return toks.selectExpr(
-        f"`{id_col}`", f"{_shingles_sql('toks', n)} AS sh"
+        _ident(id_col), f"{_shingles_sql('toks', n)} AS sh"
     )
 
 
@@ -340,7 +348,7 @@ def minhash_signatures(
         # optimized plan pinned identical to the Column-built form)
         hashed = shingles.select(
             F.col(id_col), F.explode("sh").alias("_sg")
-        ).selectExpr(f"`{id_col}`", f"{_md5_long_sql('_sg')} AS _h")
+        ).selectExpr(_ident(id_col), f"{_md5_long_sql('_sg')} AS _h")
         lo_sql = f"(_h & {(1 << 30) - 1})"
         return hashed.groupBy(id_col).agg(
             *[
@@ -733,7 +741,7 @@ def simhash_frame(
     hash_exprs = [f"{_md5_long_sql('_t', seed=101)} AS _h1"]
     if bits > 60:
         hash_exprs.append(f"{_md5_long_sql('_t', seed=202)} AS _h2")
-    hashed = toks.selectExpr(f"`{id_col}`", *hash_exprs)
+    hashed = toks.selectExpr(_ident(id_col), *hash_exprs)
 
     def sign_sum(i: int) -> Column:
         src, off = ("_h1", i) if i < 60 else ("_h2", i - 60)
@@ -749,7 +757,7 @@ def simhash_frame(
         for i in range(bits)
     )
     return sums.selectExpr(
-        f"`{id_col}`", f"(cast(0 as bigint) + {sig}) AS sig"
+        _ident(id_col), f"(cast(0 as bigint) + {sig}) AS sig"
     )
 
 

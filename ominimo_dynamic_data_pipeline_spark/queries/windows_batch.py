@@ -268,7 +268,7 @@ def q116_streaming_stateful_totals_e2e(
         totals,
         "q116_stateful_totals_sink",
         output_mode="update",
-        # auto-posture: heap store below the measured 8 GB crossover,
+        # auto-posture: heap store below the measured 256 MB crossover,
         # RocksDB above (q116 was the crossover's measurement subject)
         input_bytes=stream_ops.dataset_bytes(sf_dir),
     )

@@ -396,7 +396,7 @@ def sized_state_partitions(
     sf_dir: str,
     table: str = "events.parquet",
     target_bytes: int = 256 << 10,
-    floor: int = 8,
+    floor: int = 1,
 ) -> int:
     """State-store instance count sized to the INPUT, not the session's
     batch-shuffle width: one partition per ~256 KB of source parquet,
@@ -405,11 +405,13 @@ def sized_state_partitions(
     measured best-of-both: the miniature sf0.1 stream drops 4 state
     stores x 32 partitions of per-batch overhead (q115 5.6 -> 2.1 s),
     while the sf1 session-window state keeps its parallelism (q102
-    6.7 -> ~3 s at 22+ partitions).  At cluster scale the session cap is
-    the lever: target state volume per partition, constant across
-    restarts of a checkpoint."""
-    import os
-
+    6.7 -> ~3 s at 22+ partitions).  No fixed floor above one store:
+    a heap-store commit measured ~45 ms alone and ~90 ms with 8 at once
+    (q141 at sf0.01, 4 vCPUs), so the sf0.01 events source (~220 KB)
+    gets 1 store, sf0.1 (~2 MB) 7, and sf1 and above the 256 KB rule up
+    to the session width.  At cluster scale the session cap is the
+    lever: target state volume per partition, constant across restarts
+    of a checkpoint."""
     try:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
@@ -500,6 +502,44 @@ HEAP_PROVIDER = (
     "HDFSBackedStateStoreProvider"
 )
 
+NO_DATA_BATCHES_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+# Analyzed-plan node classes of a dedup-only stream: the dedup operators
+# themselves plus nodes that keep no state.  Any other streaming node
+# (Aggregate, Join, FlatMapGroups*WithState, TransformWithState*, limits,
+# or a class this list does not know) keeps the trailing no-data batch.
+_DEDUP_NODES = frozenset({"Deduplicate", "DeduplicateWithinWatermark"})
+_STATELESS_NODES = frozenset({
+    "EventTimeWatermark", "Filter", "Project", "StreamingRelation",
+    "StreamingRelationV2", "SubqueryAlias", "Union",
+})
+
+
+def _streaming_node_classes(stream_df: DataFrame) -> set[str]:
+    """Simple class names of the STREAMING nodes of the analyzed plan.
+    Static subtrees (the dimension side of a stream-static join) are not
+    entered: they hold no state.  Private Py4J bridge, classic PySpark
+    only (validated on Spark 4.1); raises under Spark Connect."""
+    names: set[str] = set()
+    todo = [stream_df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if not node.isStreaming():
+            continue
+        names.add(node.getClass().getSimpleName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def _dedup_only(nodes: set[str]) -> bool:
+    """True when the dedups are the plan's only stateful nodes: its
+    trailing no-data batch emits no rows and merely evicts dedup state
+    below the watermark."""
+    return bool(nodes & _DEDUP_NODES) and nodes <= (
+        _DEDUP_NODES | _STATELESS_NODES
+    )
+
 
 def run_to_completion(
     stream_df: DataFrame,
@@ -580,35 +620,46 @@ def run_to_completion(
 
     ``input_bytes`` (e.g. ``dataset_bytes(sf_dir)``) enables the
     AUTO provider choice when ``state_store`` is None: rocksdb at/above
-    the measured 8 GB crossover (session.auto_state_store — heap is
+    the measured 256 MB crossover (session.auto_state_store — heap is
     faster below, OOM-prone above), else the session default.  An
     explicit ``state_store`` always wins.
 
+    One micro-batch for a bounded dedup stream: with ``resume=False``,
+    ``append`` output and a plan whose only stateful nodes are
+    ``Deduplicate`` / ``DeduplicateWithinWatermark`` (decided by walking
+    the analyzed plan's node classes), the stream starts with
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false``.  Its
+    trailing availableNow batch would emit no rows; it only evicts dedup
+    state from a checkpoint the next clean run deletes (q141 at sf0.01:
+    2 -> 1 batches, state commit 1.52 -> 0.04 s).  Aggregates, joins and
+    the ``*WithState`` operators keep it: they emit on no-data batches
+    (closed windows, outer-join nulls, timers).
+
     NOT re-entrant when ``shuffle_partitions`` or ``state_store`` is
-    set: the override mutates session-global conf around the stream
-    start, so any query planned concurrently on the shared SparkSession
-    (e.g. parallel test execution) can capture the temporary value.
-    Callers that need isolation should pass a dedicated
-    ``SparkSession.newSession()`` stream instead."""
+    set, or the one-batch rule applies: the override mutates
+    session-global conf around the stream start, so any query planned
+    concurrently on the shared SparkSession (e.g. parallel test
+    execution) can capture the temporary value.  Callers that need
+    isolation should pass a dedicated ``SparkSession.newSession()``
+    stream instead."""
+    try:
+        nodes = (
+            _streaming_node_classes(stream_df) if stream_df.isStreaming
+            else set()
+        )
+    except Exception as exc:
+        # Spark Connect (_jdf absent): callers must pass output_mode
+        # explicitly, and the no-data batch stays on
+        if output_mode is None:
+            raise RuntimeError(
+                "run_to_completion could not inspect the analyzed plan "
+                "to pick an output mode (classic PySpark only); pass "
+                "output_mode explicitly: " + repr(exc)
+            ) from exc
+        nodes = set()
     if output_mode is None:
-        if stream_df.isStreaming:
-            try:
-                # Private Py4J bridge (classic mode only, validated on
-                # Spark 4.1): the analyzed plan tells us whether this is
-                # a streaming aggregation.  Under Spark Connect (_jdf
-                # absent) callers must pass output_mode explicitly.
-                analyzed = (
-                    stream_df._jdf.queryExecution().analyzed().toString()
-                )
-            except Exception as exc:
-                raise RuntimeError(
-                    "run_to_completion could not inspect the analyzed plan "
-                    "to pick an output mode (classic PySpark only); pass "
-                    "output_mode explicitly: " + repr(exc)
-                ) from exc
-            output_mode = "complete" if "Aggregate" in analyzed else "append"
-        else:
-            output_mode = "append"
+        output_mode = "complete" if "Aggregate" in nodes else "append"
+    one_batch = not resume and output_mode == "append" and _dedup_only(nodes)
     spark = stream_df.sparkSession
     if state_store is None and input_bytes is not None:
         from ominimo_dynamic_data_pipeline_spark.session import (
@@ -621,6 +672,9 @@ def run_to_completion(
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     prev_provider = spark.conf.get(provider_key, None)
+    prev_no_data = spark.conf.get(NO_DATA_BATCHES_KEY, None)
+    if one_batch:
+        spark.conf.set(NO_DATA_BATCHES_KEY, "false")
     if state_store is not None:
         lowered = state_store.lower()
         if lowered == "rocksdb":
@@ -679,17 +733,25 @@ def run_to_completion(
         try:
             prog = list(q.recentProgress)
             ms = lambda p, k: (p["durationMs"] or {}).get(k, 0)  # noqa: E731
-            state_metric_keys: set[str] = set()
-            for p in prog:
-                for so in p.get("stateOperators") or []:
-                    state_metric_keys.update(
-                        (so.get("customMetrics") or {}).keys()
-                    )
+            state_ops = [
+                so for p in prog for so in (p.get("stateOperators") or [])
+            ]
+
+            def state_sum_sec(key: str) -> float:
+                return round(
+                    sum(int(so.get(key) or 0) for so in state_ops) / 1000.0, 3
+                )
+
+            def state_peak(key: str) -> int:
+                return max((int(so.get(key) or 0) for so in state_ops), default=0)
+
             LAST_RUN_STATS[query_name] = {
                 # provider evidence: RocksDB stores report rocksdb*
                 # custom metrics per state operator, heap stores do not
                 "rocksdb_state": any(
-                    k.startswith("rocksdb") for k in state_metric_keys
+                    k.startswith("rocksdb")
+                    for so in state_ops
+                    for k in (so.get("customMetrics") or {})
                 ),
                 "batches": len(prog),
                 "input_rows": int(sum(p["numInputRows"] or 0 for p in prog)),
@@ -717,52 +779,26 @@ def run_to_completion(
                 # (max(), not the final batch — eviction-heavy streams
                 # like q141's watermark expiry shrink state between
                 # batches, and the peak is what sizes the store).
-                "state_update_sec": round(
-                    sum(
-                        int(so.get("allUpdatesTimeMs") or 0)
-                        for p in prog
-                        for so in (p.get("stateOperators") or [])
-                    )
-                    / 1000.0,
-                    3,
-                ),
-                "state_commit_sec": round(
-                    sum(
-                        int(so.get("commitTimeMs") or 0)
-                        for p in prog
-                        for so in (p.get("stateOperators") or [])
-                    )
-                    / 1000.0,
-                    3,
-                ),
-                "state_removal_sec": round(
-                    sum(
-                        int(so.get("allRemovalsTimeMs") or 0)
-                        for p in prog
-                        for so in (p.get("stateOperators") or [])
-                    )
-                    / 1000.0,
-                    3,
-                ),
-                "state_rows_total": max(
+                "state_update_sec": state_sum_sec("allUpdatesTimeMs"),
+                "state_commit_sec": state_sum_sec("commitTimeMs"),
+                "state_removal_sec": state_sum_sec("allRemovalsTimeMs"),
+                "state_rows_total": state_peak("numRowsTotal"),
+                # the state-store count the stream really ran with; the
+                # session-window operator reports 0 instances (Spark
+                # 4.1), and it keeps one store per shuffle partition
+                "state_store_instances": max(
                     (
-                        int(so.get("numRowsTotal") or 0)
-                        for p in prog
-                        for so in (p.get("stateOperators") or [])
+                        int(
+                            so.get("numStateStoreInstances")
+                            or so.get("numShufflePartitions")
+                            or 0
+                        )
+                        for so in state_ops
                     ),
                     default=0,
                 ),
                 "state_memory_gb": round(
-                    max(
-                        (
-                            int(so.get("memoryUsedBytes") or 0)
-                            for p in prog
-                            for so in (p.get("stateOperators") or [])
-                        ),
-                        default=0,
-                    )
-                    / 2**30,
-                    3,
+                    state_peak("memoryUsedBytes") / 2**30, 3
                 ),
             }
         except Exception:  # accounting must never fail the run
@@ -770,11 +806,15 @@ def run_to_completion(
     finally:
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if state_store is not None:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
+        for key, was, changed in (
+            (provider_key, prev_provider, state_store is not None),
+            (NO_DATA_BATCHES_KEY, prev_no_data, one_batch),
+        ):
+            if changed:
+                if was is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, was)
     has_files = Path(data_dir).is_dir() and any(
         Path(data_dir).rglob("*.parquet")
     )

@@ -448,6 +448,17 @@ def test_shingle_frame_drops_short_docs(docs):
     assert {0, 1, 2, 3} <= out
 
 
+def test_shingle_frame_quotes_backticked_column_names(docs):
+    # caller-supplied names are rendered as quoted identifiers: a name
+    # carrying a backtick shingles exactly like a plain-named copy
+    odd = docs.toDF("doc`id", "te`xt")
+    out = D.shingle_frame(odd, id_col="doc`id", text_col="te`xt")
+    assert out.columns == ["doc`id", "sh"]
+    got = {(r[0], tuple(r[1])) for r in out.collect()}
+    want = {(r[0], tuple(r[1])) for r in D.shingle_frame(docs).collect()}
+    assert got == want and want
+
+
 def test_rolling_fingerprint_is_order_sensitive(spark):
     df = spark.createDataFrame(
         [(0, "alpha beta"), (1, "beta alpha"), (2, "alpha beta")],

@@ -769,3 +769,118 @@ def test_stream_sources_read_directory_layout(spark, sf_dir, tmp_path):
         scratch_dir=str(tmp_path / "scratch_d"),
     )
     assert dout.collect()[0]["count"] == docs_expected
+
+
+def test_no_data_batch_rule_reads_plan_node_classes(
+    spark, sf_dir, stream_events
+):
+    """Only a plan whose stateful nodes are all dedups may skip the
+    trailing no-data batch; aggregates, joins and *WithState operators
+    emit on it.  Static subtrees (a stream-static join's dimension side)
+    are not walked."""
+    def dedup_only(df):
+        return ops._dedup_only(ops._streaming_node_classes(df))
+
+    e = stream_events
+    assert dedup_only(ops.stream_dedup(e.union(e), keys=("event_id",)))
+    assert dedup_only(e.dropDuplicates(["event_id"]).filter("value > 0"))
+    assert not dedup_only(e.filter("value > 0"))  # stateless: nothing to skip
+    assert not dedup_only(ops.tumbling_counts(e))
+    assert not dedup_only(ops.interval_click_attribution(e))
+    assert not dedup_only(ops.stateful_user_totals(e))
+    assert not dedup_only(ops.stream_dedup(e).limit(5))  # unknown node: keep
+    dim = load_table(spark, sf_dir, "customer")
+    assert not dedup_only(ops.enriched_segment_counts(e, dim))
+    # a static-side dedup holds no state; the streaming aggregate emits
+    fresh = ops.streaming_incremental_dedup(
+        ops.read_documents_stream(spark, sf_dir),
+        load_table(spark, sf_dir, "documents").select(F.md5("text").alias("fp")),
+    )
+    assert not dedup_only(fresh)
+
+
+def test_bounded_dedup_stream_runs_one_batch_on_one_store(spark, sf_dir):
+    """q141 at sf0.01 (~220 KB of events): one state store sized to the
+    source and no trailing eviction batch, with the oracle's answer."""
+    import os
+
+    from ominimo_dynamic_data_pipeline_spark.queries.windows_batch import (
+        q141_streaming_dedup_e2e,
+    )
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf):
+        pytest.skip("sf0.01 testdata missing")
+    got = _collect_sorted(
+        q141_streaming_dedup_e2e(spark, sf),
+        ["event_type", "n_events", "value_sum"],
+    )
+    stats = ops.LAST_RUN_STATS["q141_streaming_dedup_sink"]
+    assert stats["batches"] == 1
+    assert stats["state_store_instances"] == 1
+    assert stats["state_rows_total"] == stats["input_rows"] // 2
+    want = _collect_sorted(
+        load_table(spark, sf, "events").groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("value_sum"),
+        ),
+        ["event_type", "n_events", "value_sum"],
+    )
+    assert got == want
+
+
+def test_append_window_stream_keeps_no_data_batch(
+    spark, static_events, stream_events
+):
+    """An append-mode windowed aggregate emits its closed windows on the
+    no-data batch that follows the data: skipping it would return
+    nothing."""
+    import datetime as dt
+
+    name = "t_tumbling_append"
+    streamed = ops.run_to_completion(
+        ops.tumbling_counts(stream_events), name, output_mode="append"
+    )
+    assert ops.LAST_RUN_STATS[name]["batches"] >= 2
+    watermark = static_events.agg(F.max("ts")).first()[0] - dt.timedelta(
+        minutes=30
+    )
+    closed = ops.tumbling_counts(static_events).filter(
+        F.col("window_end") <= F.lit(watermark)
+    )
+    cols = ["window_start", "event_type", "n_events", "value_sum"]
+    want = _collect_sorted(closed, cols)
+    assert want and _collect_sorted(streamed, cols) == want
+
+
+def test_resumable_dedup_run_keeps_no_data_batch(stream_events, tmp_path):
+    """The one-batch rule applies to clean runs only: a resume=True run
+    keeps the eviction batch, since its checkpoint outlives the run."""
+    dedup = ops.stream_dedup(stream_events, keys=("event_id",))
+    for resume, batches in ((False, 1), (True, 2)):
+        name = f"t_dedup_resume_{resume}"
+        out = ops.run_to_completion(
+            dedup, name, resume=resume, scratch_dir=str(tmp_path / name)
+        )
+        assert ops.LAST_RUN_STATS[name]["batches"] == batches
+        assert out.count() == ops.LAST_RUN_STATS[name]["input_rows"]
+
+
+def test_failing_stream_restores_session_conf(spark, stream_events, tmp_path):
+    """A foreachBatch that raises still restores every conf the run
+    overrode around the stream start."""
+    keys = (ops.NO_DATA_BATCHES_KEY, "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    boom = ops.stream_dedup(stream_events).withColumn(
+        "boom", F.expr("cast(assert_true(event_id < 0) as bigint)")
+    )
+    with pytest.raises(Exception):
+        ops.run_to_completion(
+            boom,
+            "t_failing_sink",
+            shuffle_partitions=3,
+            scratch_dir=str(tmp_path / "failing"),
+        )
+    assert {k: spark.conf.get(k, None) for k in keys} == before
