@@ -25,6 +25,7 @@ bench:
 	python bench.py
 
 # Full-catalog Spark-vs-DuckDB hash sweep at the sf1 decade (~25-40 min;
-# regenerates nothing — run tools/make_sf1.py first in a fresh container).
+# regenerates nothing — run `python tools/make_sf.py sf1` first in a fresh
+# container).
 sweep-sf1:
 	python tools/sweep_sf1.py

@@ -194,6 +194,12 @@ def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _col(name: str) -> Column:
+    """Column for a caller-supplied name (``F.col``/``groupBy`` parse a
+    raw name, so one containing a backtick would not resolve)."""
+    return F.col(_ident(name))
+
+
 def _tokens_sql(src: str) -> str:
     """Spark-SQL rendering of text.tokens() over column ``src`` (same
     expression tree; construction-latency note at _md5_long_sql)."""
@@ -257,15 +263,15 @@ def gram_frame(
     from pyspark.sql.window import Window
 
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
+        _col(id_col),
+        F.posexplode(tokens(_col(text_col))).alias("pos", "tok"),
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(_col(id_col)).orderBy("pos")
     parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, n)]
     tail = F.lead("tok", n - 1).over(w)
     return (
         toks.select(
-            F.col(id_col),
+            _col(id_col),
             F.concat_ws(" ", *parts).alias("gram"),
             tail.alias("_tail"),
         )
@@ -280,11 +286,14 @@ def exact_dedup(
 ) -> DataFrame:
     """Keep the lowest-id representative per distinct normalized text.
     One hash-partition shuffle on the fingerprint; survivors = group mins."""
-    fp = F.md5(normalize_text(F.col(text_col)))
+    fp = F.md5(normalize_text(_col(text_col)))
     return (
         df.withColumn("fp", fp)
         .groupBy("fp")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
+        .agg(
+            F.min(_col(id_col)).alias(id_col),
+            F.count(F.lit(1)).alias("n_copies"),
+        )
     )
 
 
@@ -347,10 +356,10 @@ def minhash_signatures(
         # SQL-rendered ladder (construction-latency note at _md5_long_sql;
         # optimized plan pinned identical to the Column-built form)
         hashed = shingles.select(
-            F.col(id_col), F.explode("sh").alias("_sg")
+            _col(id_col), F.explode("sh").alias("_sg")
         ).selectExpr(_ident(id_col), f"{_md5_long_sql('_sg')} AS _h")
         lo_sql = f"(_h & {(1 << 30) - 1})"
-        return hashed.groupBy(id_col).agg(
+        return hashed.groupBy(_col(id_col)).agg(
             *[
                 F.expr(
                     f"min((shiftright(_h, 30) + {i + 1} * {lo_sql})"
@@ -368,10 +377,10 @@ def minhash_signatures(
     # attribute (one md5 per shingle; per-(i, shingle) work in the nested
     # transform is then one multiply-add-mod).
     hs_df = sh_df.select(
-        F.col(id_col),
+        _col(id_col),
         F.transform(F.col("sh"), lambda s: md5_long(s)).alias("hs"),
     ).select(
-        F.col(id_col),
+        _col(id_col),
         F.transform(F.col("hs"), lambda h: F.shiftright(h, 30)).alias("hi"),
         F.transform(F.col("hs"), lambda h: h.bitwiseAND(lo_mask)).alias("lo"),
     )
@@ -386,12 +395,12 @@ def minhash_signatures(
             )
         ),
     )
-    mins_df = hs_df.select(F.col(id_col), mins.alias("mins"))
+    mins_df = hs_df.select(_col(id_col), mins.alias("mins"))
     # No null filter here: shingle_frame already dropped shingle-less docs,
     # and a predicate on mh_i would be pushed down with the whole expression
     # chain substituted in (see shingle_frame docstring).
     return mins_df.select(
-        F.col(id_col),
+        _col(id_col),
         *[F.col("mins")[i].alias(f"mh_{i}") for i in range(num_hashes)],
     )
 
@@ -527,8 +536,13 @@ def minhash_band_buckets(
     from pyspark.sql.window import Window
 
     buckets = sigs.select(
-        F.col(id_col), F.explode(_band_bucket_structs(num_hashes, bands)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        _col(id_col),
+        F.explode(_band_bucket_structs(num_hashes, bands)).alias("bb"),
+    ).select(
+        _col(id_col),
+        F.col("bb.band").alias("band"),
+        F.col("bb.bucket").alias("bucket"),
+    )
     if max_bucket_size is not None:
         w = Window.partitionBy("band", "bucket")
         buckets = (
@@ -561,11 +575,16 @@ def minhash_band_candidates(
     quadratically dominating the stage — its members' true near-dups are
     still found through their other, discriminating bands."""
     buckets = sigs.select(
-        F.col(id_col), F.explode(_band_bucket_structs(num_hashes, bands)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        _col(id_col),
+        F.explode(_band_bucket_structs(num_hashes, bands)).alias("bb"),
+    ).select(
+        _col(id_col),
+        F.col("bb.band").alias("band"),
+        F.col("bb.bucket").alias("bucket"),
+    )
     grouped = (
         buckets.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
+        .agg(F.array_sort(F.collect_list(_col(id_col))).alias("ids"))
         .filter(F.size("ids") > 1)
     )
     if max_bucket_size is not None:
@@ -621,8 +640,8 @@ def jaccard_pairs(
     # `jaccard >= t` filters otherwise inline the intersect TWICE into
     # the pair-join condition (round-13; three set passes per pair -> 1).
     staged = (
-        pairs.join(a, pairs.id_a == F.col(f"sa.{id_col}"))
-        .join(b, pairs.id_b == F.col(f"sb.{id_col}"))
+        pairs.join(a, pairs.id_a == F.col(f"sa.{_ident(id_col)}"))
+        .join(b, pairs.id_b == F.col(f"sb.{_ident(id_col)}"))
         .select(
             "id_a",
             "id_b",
@@ -731,8 +750,8 @@ def simhash_frame(
     cost the previous emptiness filter paid — never the O(grams x
     tokens) shingle-lambda blow-up gram_frame documents)."""
     toks = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("_t"),
+        _col(id_col),
+        F.explode(F.array_distinct(tokens(_col(text_col)))).alias("_t"),
     )
     # SQL-rendered ladders below (construction-latency note at
     # _md5_long_sql): the 64 sign-sum aggregates plus the 64-term
@@ -750,7 +769,9 @@ def simhash_frame(
             f" THEN 1 ELSE -1 END) AS _s{i}"
         )
 
-    sums = hashed.groupBy(id_col).agg(*[sign_sum(i) for i in range(bits)])
+    sums = hashed.groupBy(_col(id_col)).agg(
+        *[sign_sum(i) for i in range(bits)]
+    )
     sig = " + ".join(
         f"CASE WHEN _s{i} > 0 THEN shiftleft(cast(1 as bigint), {i})"
         f" ELSE cast(0 as bigint) END"
@@ -803,7 +824,7 @@ def simhash_near_dups(
         ]
     )
     banded = sigs.select(
-        F.col(id_col), F.col("sig"), F.explode(band_structs).alias("bb")
+        _col(id_col), F.col("sig"), F.explode(band_structs).alias("bb")
     ).select(
         id_col, "sig", F.col("bb.band").alias("band"), F.col("bb.bits").alias("bits")
     )
@@ -817,7 +838,7 @@ def simhash_near_dups(
         banded = _persist_tracked("simhash_near_dups", banded)
     pre = banded.groupBy("band", "bits").agg(
         F.array_sort(
-            F.collect_list(F.struct(F.col(id_col).alias("id"), "sig"))
+            F.collect_list(F.struct(_col(id_col).alias("id"), "sig"))
         ).alias("members")
     )
     grouped = pre.filter(F.size("members") > 1)
@@ -944,7 +965,7 @@ def norm_frame(
     from 98 s to the dot-product-only cost, with bit-identical results —
     cos is still dot/(na*nb) on the same doubles."""
     cast = df.select(
-        F.col(id_col),
+        _col(id_col),
         *(extra_cols or []),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec_d"),
     )
@@ -982,12 +1003,12 @@ def embedding_near_dups(
     """
     nf = norm_frame(df, id_col, vec_col, [bucket_col] if bucket_col else None)
     a = nf.select(
-        F.col(id_col).alias("id_a"), F.col("vec_d").alias("va"),
+        _col(id_col).alias("id_a"), F.col("vec_d").alias("va"),
         F.col("nrm").alias("nrm_a"),
         *( [F.col(bucket_col).alias("bucket_a")] if bucket_col else [] ),
     )
     b = nf.select(
-        F.col(id_col).alias("id_b"), F.col("vec_d").alias("vb"),
+        _col(id_col).alias("id_b"), F.col("vec_d").alias("vb"),
         F.col("nrm").alias("nrm_b"),
         *( [F.col(bucket_col).alias("bucket_b")] if bucket_col else [] ),
     )
@@ -1030,7 +1051,7 @@ def embedding_near_dups_blas(
     import numpy as np
 
     id_field = df.schema[id_col].dataType.simpleString()
-    pdf_all = df.select(id_col, vec_col).toPandas()
+    pdf_all = df.select(_col(id_col), vec_col).toPandas()
     ids_all = pdf_all[id_col].to_numpy()
     x_all = np.stack(pdf_all[vec_col].to_numpy()).astype(np.float64)
     n, dim = x_all.shape
@@ -1061,7 +1082,7 @@ def embedding_near_dups_blas(
             )
 
     schema = f"id_a {id_field}, id_b {id_field}, cos double"
-    return df.select(id_col, vec_col).mapInPandas(kernel, schema)
+    return df.select(_col(id_col), vec_col).mapInPandas(kernel, schema)
 
 
 def dedup_clusters(
@@ -1158,22 +1179,22 @@ def cluster_representatives(
         raise ValueError(
             f"cluster_representatives: docs frame lacks columns {missing}"
         )
-    j = clusters.join(docs.select(id_col, score_col), id_col)
+    j = clusters.join(docs.select(_col(id_col), score_col), id_col)
     # one exchange: the argmax row_number and the member/total stats are
     # all window aggregates over the same cluster partition (an explicit
     # groupBy branch would re-evaluate the join and add a join-back)
     w = Window.partitionBy(cluster_col).orderBy(
-        F.col(score_col).desc(), F.col(id_col)
+        _col(score_col).desc(), _col(id_col)
     )
     wc = Window.partitionBy(cluster_col)
     return (
         j.select(
             cluster_col,
-            F.col(id_col).alias(f"rep_{id_col}"),
-            F.col(score_col).cast("bigint").alias("score_kept"),
+            _col(id_col).alias(f"rep_{id_col}"),
+            _col(score_col).cast("bigint").alias("score_kept"),
             F.row_number().over(w).alias("_rn"),
             F.count(F.lit(1)).over(wc).cast("bigint").alias("n_members"),
-            F.sum(F.col(score_col).cast("decimal(19,0)"))
+            F.sum(_col(score_col).cast("decimal(19,0)"))
             .over(wc)
             .alias("_total"),
         )
@@ -1225,15 +1246,15 @@ def positional_gram_fps(
     from pyspark.sql.window import Window
 
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
+        _col(id_col),
+        F.posexplode(tokens(_col(text_col))).alias("pos", "tok"),
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(_col(id_col)).orderBy("pos")
     parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, n)]
     tail = F.lead("tok", n - 1).over(w)
     return (
         toks.select(
-            F.col(id_col),
+            _col(id_col),
             F.col("pos"),
             F.md5(F.concat_ws(" ", *parts)).alias("fp"),
             tail.alias("_tail"),
@@ -1277,25 +1298,25 @@ def repeated_spans(
     flagged = (
         grams.withColumn("n_occ", F.count(F.lit(1)).over(wfp))
         .filter(F.col("n_occ") >= min_count)
-        .select(id_col, "pos")
+        .select(_col(id_col), "pos")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(_col(id_col)).orderBy("pos")
     prev_end = F.max(F.col("pos") + n).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     marked = flagged.select(
-        F.col(id_col),
+        _col(id_col),
         F.col("pos"),
         F.when(prev_end.isNull() | (F.col("pos") > prev_end), 1)
         .otherwise(0)
         .alias("brk"),
     )
     islands = marked.select(
-        F.col(id_col),
+        _col(id_col),
         F.col("pos"),
         F.sum("brk").over(w).alias("island"),
     )
-    return islands.groupBy(id_col, "island").agg(
+    return islands.groupBy(_col(id_col), "island").agg(
         F.min("pos").alias("span_start"),
         (F.max("pos") + n).alias("span_end"),
         (F.max("pos") + n - F.min("pos")).alias("span_n_tokens"),
@@ -1328,7 +1349,7 @@ def strip_repeated_spans(
             f"strip_repeated_spans reserves helper columns {sorted(clash)}; "
             "rename them on the input first"
         )
-    per_doc = spans.groupBy(id_col).agg(
+    per_doc = spans.groupBy(_col(id_col)).agg(
         F.collect_list(
             F.struct(
                 F.col("span_start").alias("s"), F.col("span_end").alias("e")
@@ -1337,7 +1358,7 @@ def strip_repeated_spans(
     )
     others = [c for c in df.columns if c != text_col]
     staged = df.select(
-        *others, tokens(F.col(text_col)).alias("_tk")
+        *others, tokens(_col(text_col)).alias("_tk")
     ).join(per_doc, id_col, "left")
     kept = F.when(
         F.col("_spans").isNull(), F.col("_tk")
@@ -1373,14 +1394,19 @@ def incremental_exact_dedup(
     the group-min; a Bloom prefilter — operators/bloom.py — can shed most
     of the anti-join's shuffle when the reference is far larger than the
     batch).
+
+    On a STREAMING ``incoming`` frame the same plan keeps the dedup
+    standing as data arrives (q130): a stream-static anti join against
+    the index, then a streaming group-min per fingerprint whose state is
+    one tiny row per distinct fresh fingerprint.
     """
-    fp = F.md5(normalize_text(F.col(text_col)))
+    fp = F.md5(normalize_text(_col(text_col)))
     inc = incoming.withColumn("fp", fp)
     fresh = inc.join(
         reference_fps.select("fp").distinct(), on="fp", how="left_anti"
     )
     return fresh.groupBy("fp").agg(
-        F.min(id_col).alias(id_col),
+        F.min(_col(id_col)).alias(id_col),
         F.count(F.lit(1)).alias("n_batch_copies"),
     )
 
@@ -1441,8 +1467,8 @@ def incremental_near_dedup(
         b_inc.alias("i")
         .join(b_ref.alias("r"), ["band", "bucket"])
         .select(
-            F.col(f"i.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col(f"i.{_ident(id_col)}").alias("id_a"),
+            F.col(f"r.{_ident(id_col)}").alias("id_b"),
         )
         .distinct()
     )
@@ -1504,7 +1530,7 @@ def novelty_scores(
     w = Window.partitionBy("gram")
     tagged = posts.withColumn("_df", F.count(F.lit(1)).over(w))
     return (
-        tagged.groupBy(id_col)
+        tagged.groupBy(_col(id_col))
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.count_if(F.col("_df") == 1).alias("n_novel"),
@@ -1583,10 +1609,10 @@ def shingle_join_candidates(
     a, b = rare.alias("ca"), rare.alias("cb")
     return (
         a.join(b, "gram")
-        .filter(F.col(f"ca.{id_col}") < F.col(f"cb.{id_col}"))
+        .filter(F.col(f"ca.{_ident(id_col)}") < F.col(f"cb.{_ident(id_col)}"))
         .select(
-            F.col(f"ca.{id_col}").alias("id_a"),
-            F.col(f"cb.{id_col}").alias("id_b"),
+            F.col(f"ca.{_ident(id_col)}").alias("id_a"),
+            F.col(f"cb.{_ident(id_col)}").alias("id_b"),
         )
         .distinct()
     )
@@ -1625,7 +1651,7 @@ def containment_near_dups(
             "containment_near_dups",
             shingle_frame(df, id_col, text_col, shingle_n),
         )
-        posts = sh.select(F.col(id_col), F.explode("sh").alias("gram"))
+        posts = sh.select(_col(id_col), F.explode("sh").alias("gram"))
     else:
         # default path: candidates re-derive via gram_frame and the
         # scorer builds its own shingle frame — no dead lineage here
@@ -1697,8 +1723,8 @@ def containment_scores(
     # barrier the min_containment filter's pushdown inlined the
     # intersect TWICE into the pair-join condition (round-13).
     staged = (
-        pairs.join(a, pairs.id_a == F.col(f"sa.{id_col}"))
-        .join(b, pairs.id_b == F.col(f"sb.{id_col}"))
+        pairs.join(a, pairs.id_a == F.col(f"sa.{_ident(id_col)}"))
+        .join(b, pairs.id_b == F.col(f"sb.{_ident(id_col)}"))
         .select(
             "id_a",
             "id_b",

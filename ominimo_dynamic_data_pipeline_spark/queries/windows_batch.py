@@ -302,6 +302,7 @@ def q116_streaming_stateful_totals_e2e(
 def q130_streaming_incremental_dedup_e2e(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    from ominimo_dynamic_data_pipeline_spark.llm import dedup as D
     from ominimo_dynamic_data_pipeline_spark.llm.text import normalize_text
 
     static = load_table(spark, sf_dir, "documents").filter(
@@ -313,7 +314,7 @@ def q130_streaming_incremental_dedup_e2e(
     src = stream_ops.read_documents_stream(spark, sf_dir).filter(
         F.col("doc_id") % 10 >= 8
     )
-    fresh = stream_ops.streaming_incremental_dedup(src, ref_fps)
+    fresh = D.incremental_exact_dedup(src, ref_fps)
     return stream_ops.run_to_completion(
         fresh,
         "q130_incremental_dedup_sink",

@@ -8,9 +8,11 @@ scale-aware configuration:
   * AQE on (runtime re-planning, skew-join splitting, partition coalescing)
   * Arrow execution for the pandas-UDF escape hatch
   * UTC session timezone so temporal semantics match the DuckDB oracle
-  * shuffle partitions sized for the local harness but overridable via env
-    (on a real cluster you'd set this to ~2-3x total cores or rely on AQE
-    coalescing from a high initial value)
+  * shuffle partitions sized for the local harness; any key set at launch
+    (``spark-submit --conf``, or ``PYSPARK_SUBMIT_ARGS`` for a plain
+    ``python`` launch) wins over these defaults (on a real cluster you'd
+    set the width to ~2-3x total cores or rely on AQE coalescing from a
+    high initial value)
 """
 
 from __future__ import annotations
@@ -43,7 +45,7 @@ _DEFAULTS: dict[str, str] = {
     # get and keeps the shared shingle cache resident by design.  Clamped
     # to half the machine's RAM so small hosts degrade to Spark spilling
     # instead of OS-level swap/OOM (set in get_spark via
-    # _driver_memory_gb(); overridable through extra_conf).
+    # _driver_memory_gb(); overridable at launch or through extra_conf).
     # Input-split sizing, local-harness value (cluster deployments restore
     # the 128 MB default via spark-submit): a 100 TB table is thousands of
     # ~128 MB files, so scan parallelism is never file-bound — but the
@@ -100,11 +102,12 @@ _DEFAULTS: dict[str, str] = {
     ),
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "false",
     # Round-11 measured pass on q141's watermark-eviction residual
-    # (tools/exp_q141_eviction.py, sf100 multi-file, cold process per
-    # variant, result fingerprints identical): larger memtables (fewer
-    # L0 SSTs for the expiry scan's merge iterator) + a real block cache
-    # (default is 8 MB) take q141 110.7 -> 84.4 s wall, state update
-    # 1792 -> 1250 task-s, watermark removal 505 -> 365 task-s (-28%).
+    # (BENCH_sf100.json round11_q141_eviction_knobs, sf100 multi-file,
+    # cold process per variant, result fingerprints identical): larger
+    # memtables (fewer L0 SSTs for the expiry scan's merge iterator) +
+    # a real block cache (default is 8 MB) take q141 110.7 -> 84.4 s
+    # wall, state update 1792 -> 1250 task-s, watermark removal 505 ->
+    # 365 task-s (-28%).
     # Both are storage-layout/cache-only (result-neutral) and inert on
     # the heap provider.  Memory bound: budgets apply per OPEN store and
     # only task-active stores are open, so worst-case extra is
@@ -210,7 +213,8 @@ def auto_max_partition_bytes(input_bytes: int, cpus: int | None = None) -> int:
     default at >= 64 GB inputs where multi-file layouts amortize the
     footer anyway.  sf0.1/sf1 stay at the 4 MB floor, sf10 ~1.8 GB ->
     4 MB (round-8 posture unchanged), sf30 ~5.4 GB -> ~10 MB, sf100
-    ~18 GB -> ~36 MB.  ``SPARK_GRAFT_MAX_PARTITION_BYTES`` overrides."""
+    ~18 GB -> ~36 MB.  A launch-time ``spark.sql.files.maxPartitionBytes``
+    overrides."""
     if cpus is None:
         env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
         cpus = int(env_cpus) if env_cpus else (os.cpu_count() or 32)
@@ -224,7 +228,7 @@ def auto_state_store(source_bytes: int) -> str | None:
     faster below — RocksDB pays fixed per-batch overhead — and OOM-prone
     above), else ``None`` (inherit the session default, normally heap).
     Applied per stream by ``run_to_completion(input_bytes=...)``, where
-    the evidence lives; an explicit ``state_store``/env knob wins."""
+    the evidence lives; an explicit ``state_store`` wins."""
     return (
         "rocksdb" if source_bytes >= AUTO_ROCKSDB_THRESHOLD_BYTES else None
     )
@@ -284,6 +288,18 @@ def _merge_conf(conf: dict[str, str], extra_conf: dict[str, str]) -> None:
             conf[k] = v
 
 
+# Keys handed to the gateway launch itself, ahead of PYSPARK_SUBMIT_ARGS
+# (which therefore still overrides them): the two that only take effect
+# when the driver JVM starts, and the console progress bar, which a
+# pyspark-shell launch turns on unless the launch conf sets it.
+# Everything else goes through SparkSession.builder.
+_LAUNCH_KEYS = (
+    "spark.driver.memory",
+    "spark.driver.extraJavaOptions",
+    "spark.ui.showConsoleProgress",
+)
+
+
 def get_spark(
     app_name: str = "ominimo-dynamic-data-pipeline-spark",
     master: str | None = None,
@@ -296,70 +312,54 @@ def get_spark(
     ``$SPARK_GRAFT_CPUS`` (driver contract) or all cores.
 
     ``input_bytes`` (e.g. ``estimate_input_bytes(sf_dir)``) enables
-    auto-posture for the shuffle width via
-    :func:`auto_shuffle_partitions` (derived from the measured sf30
-    spill wall).  The ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` env knob always
-    wins over the auto choice.  The state-store provider is chosen per
-    STREAM (``run_to_completion(input_bytes=...)`` →
-    :func:`auto_state_store`), not per session.
+    auto-posture for the driver heap, the shuffle width
+    (:func:`auto_shuffle_partitions`, derived from the measured sf30
+    spill wall) and the scan split (:func:`auto_max_partition_bytes`).
+    The state-store provider is chosen per STREAM
+    (``run_to_completion(input_bytes=...)`` → :func:`auto_state_store`),
+    not per session.
+
+    Precedence, highest first: ``extra_conf``; the launch conf
+    (``spark-submit --conf`` / ``--driver-memory``, or
+    ``PYSPARK_SUBMIT_ARGS`` when started from plain ``python``); the
+    auto-posture; ``_DEFAULTS``.
     """
+    from pyspark import SparkConf, SparkContext
+
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
-    # SPARK_GRAFT_DRIVER_MEMORY (e.g. "48g") wins; else auto-scale with
-    # the input estimate (static conf — only applies to a FRESH JVM;
-    # getOrCreate reuses an existing session's heap unchanged)
-    env_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY")
-    conf["spark.driver.memory"] = (
-        env_mem if env_mem else f"{_driver_memory_gb(input_bytes)}g"
-    )
-    # Scale knob (the "cluster deployments override via spark-submit"
-    # escape hatch, usable without spark-submit): the 32-partition local
-    # default right-sizes the miniature bench, but a single 180M-row
-    # shuffle across 32 partitions spills and GC-thrashes (sf30 soak:
-    # q139 went superlinear at 32, linear again at 128).  AQE coalesces
-    # DOWN from the initial value, never up — so the initial width is
-    # the scale lever.
-    env_shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env_shuffle:
-        conf["spark.sql.shuffle.partitions"] = env_shuffle
-    elif input_bytes is not None:
+    # static conf — only applies to a FRESH JVM; getOrCreate reuses an
+    # existing session's heap unchanged
+    conf["spark.driver.memory"] = f"{_driver_memory_gb(input_bytes)}g"
+    if input_bytes is not None:
+        # AQE coalesces DOWN from the initial width, never up, so the
+        # initial width is the scale lever (sf30 soak: q139 went
+        # superlinear at 32 partitions, linear again at 128).
         conf["spark.sql.shuffle.partitions"] = str(
             auto_shuffle_partitions(input_bytes)
         )
-    # Scan-split auto-posture (round 9): the static 4 MB local split is a
-    # measured 12x scan wall on single-file sf100 tables (footer re-parse
-    # per task); walk toward the 128 MB cluster default as input grows.
-    env_split = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if env_split:
-        conf["spark.sql.files.maxPartitionBytes"] = env_split
-    elif input_bytes is not None:
+        # the static 4 MB local split is a measured 12x scan wall on
+        # single-file sf100 tables (footer re-parse per task)
         conf["spark.sql.files.maxPartitionBytes"] = str(
             auto_max_partition_bytes(input_bytes)
         )
-    # State-store scale knob: the default HDFSBackedStateStore keeps all
-    # streaming state on the JVM heap — session-window state carrying
-    # transcript-sized strings OOMed the 24g heap at sf30 (q151).
-    # RocksDB keeps state off-heap/on-disk, the 100 TB deployment
-    # posture; opt in per run because it adds per-batch overhead the
-    # miniature bench doesn't need.
-    # The state-store provider is NOT auto-set at session level: the
-    # measured crossover keys on the STREAMED SOURCE's size, which the
-    # session cannot know — run_to_completion(input_bytes=...) applies
-    # auto_state_store per stream.  The env knob remains the session-wide
-    # override.
-    env_store = os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower()
-    if env_store == "rocksdb":
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
+    extra_conf = extra_conf or {}
+    _merge_conf(conf, extra_conf)
+    # Start the JVM (a no-op under spark-submit or when one is already
+    # up), then read what the launch set: SparkSession.builder options
+    # would otherwise silently override it.
+    SparkContext._ensure_initialized(
+        conf=SparkConf(loadDefaults=False).setAll(
+            (k, conf[k]) for k in _LAUNCH_KEYS
         )
-    if extra_conf:
-        _merge_conf(conf, extra_conf)
+    )
+    launch = dict(SparkConf().getAll())
+    builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in conf.items():
-        builder = builder.config(k, v)
+        if k not in launch or k in extra_conf:
+            builder = builder.config(k, v)
     return builder.getOrCreate()
 
 

@@ -360,37 +360,6 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reader.option("pathGlobFilter", "documents.parquet").load(sf_dir)
 
 
-def streaming_incremental_dedup(
-    incoming: DataFrame,
-    reference_fps: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """incremental_exact_dedup's semantics on a STREAMING incoming batch:
-    fingerprint each arriving doc, stream-static LEFT ANTI join against
-    the curated corpus's fingerprint index (the static side loads once
-    per micro-batch plan, broadcast when small), then a streaming
-    group-min per fingerprint keeps the lowest id seen across ALL
-    micro-batches (state = one tiny row per distinct fresh fingerprint).
-
-    This is the continuous-ingest deployment shape of q106: the batch
-    operator re-runs per ingest; this keeps the dedup standing as data
-    arrives.  On a static frame it degrades to the batch operator
-    (identical plan semantics), which the oracle equivalence exploits."""
-    from ominimo_dynamic_data_pipeline_spark.llm.text import normalize_text
-
-    inc = incoming.withColumn(
-        "fp", F.md5(normalize_text(F.col(text_col)))
-    )
-    fresh = inc.join(
-        reference_fps.select("fp").distinct(), on="fp", how="left_anti"
-    )
-    return fresh.groupBy("fp").agg(
-        F.min(id_col).alias(id_col),
-        F.count(F.lit(1)).alias("n_batch_copies"),
-    )
-
-
 def sized_state_partitions(
     spark: SparkSession,
     sf_dir: str,
@@ -461,8 +430,10 @@ def cleanup_scratch(
     it returns lazily READS the sink directory — so scratch outlives
     each stream by design and a long harness session accumulates it
     (round 9: 23 GB of probe scratch starved the sf100 soak's shuffle
-    space mid-query).  Call this once per session after results are
-    consumed: ``bench.py`` and ``tools/soak_heavy.py`` do.
+    space mid-query).  Call this once results are consumed: ``bench.py``
+    does once per session, ``tools/soak_heavy.py`` after every query
+    (q116 at sf100 323.3 s with prior streams' scratch on disk vs 227.6 s
+    cleaned; BENCH_sf100.json round10_streaming_drag_rootcause).
 
     The cross-application sweep is OPT-IN: only ``all_apps=True`` ever
     touches other apps' scratch (a concurrent session's live

@@ -457,6 +457,22 @@ def test_shingle_frame_quotes_backticked_column_names(docs):
     got = {(r[0], tuple(r[1])) for r in out.collect()}
     want = {(r[0], tuple(r[1])) for r in D.shingle_frame(docs).collect()}
     assert got == want and want
+    # the Column-API kernels resolve the same names
+    names = dict(id_col="doc`id", text_col="te`xt")
+    sim = D.simhash_frame(odd, **names)
+    assert sim.columns == ["doc`id", "sig"]
+    assert set(sim.collect()) == set(D.simhash_frame(docs).collect())
+    # minhash: the HOF ladder (no persisted shingles) and the
+    # explode+agg form over a persisted shingle frame
+    want_mh = set(D.minhash_signatures(docs).collect())
+    assert set(D.minhash_signatures(odd, **names).collect()) == want_mh
+    sh = D.shingle_frame(odd, **names).cache()
+    try:
+        mh = D.minhash_signatures(odd, **names, shingles=sh)
+        assert mh.columns[0] == "doc`id"
+        assert set(mh.collect()) == want_mh
+    finally:
+        sh.unpersist()
 
 
 def test_rolling_fingerprint_is_order_sensitive(spark):
@@ -2248,12 +2264,10 @@ def test_gram_frame_hand_computed(spark):
 
 
 def test_streaming_incremental_dedup_hand_computed(spark):
-    # q130's operator on its static-degradation path (same plan
-    # semantics as the streaming twin): docs 11/12 share a normalized
-    # fingerprint (min id 11 survives, 2 copies), doc 13 matches the
-    # reference corpus and is anti-joined away, doc 14 is unique.
-    from ominimo_dynamic_data_pipeline_spark.streaming import ops as S_ops
-
+    # q130's operator on a static frame (q130 runs the same operator
+    # over a stream): docs 11/12 share a normalized fingerprint (min id
+    # 11 survives, 2 copies), doc 13 matches the reference corpus and is
+    # anti-joined away, doc 14 is unique.
     incoming = spark.createDataFrame(
         [
             (11, "Hello  World"),
@@ -2268,8 +2282,6 @@ def test_streaming_incremental_dedup_hand_computed(spark):
     ).select(F.md5(T.normalize_text(F.col("text"))).alias("fp"))
     got = {
         r["doc_id"]: r["n_batch_copies"]
-        for r in S_ops.streaming_incremental_dedup(
-            incoming, reference
-        ).collect()
+        for r in D.incremental_exact_dedup(incoming, reference).collect()
     }
     assert got == {11: 2, 14: 1}

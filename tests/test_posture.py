@@ -5,14 +5,22 @@ encoded defaults can never drift from their evidence."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 from ominimo_dynamic_data_pipeline_spark.session import (
     AUTO_ROCKSDB_THRESHOLD_BYTES,
+    auto_max_partition_bytes,
     auto_shuffle_partitions,
     auto_state_store,
     estimate_input_bytes,
 )
 
 GB = 1 << 30
+REPO = Path(__file__).resolve().parent.parent
 
 
 def test_shuffle_width_floor_at_miniature_scale():
@@ -161,8 +169,8 @@ def test_scan_split_scales_with_input():
         cur = auto_max_partition_bytes(b, cpus=32)
         assert prev <= cur <= 128 * MB
         prev = cur
-    # round-10 multi-file validation (tools/exp_multifile_split.py,
-    # BENCH_sf100.json): the same 14 GB lineitem as 64 files scans in
+    # round-10 multi-file validation (BENCH_sf100.json
+    # round10_multifile_split_validation): the same 14 GB lineitem as 64 files scans in
     # 7.85 / 6.16 / 6.33 s at 4 / 34(auto) / 128 MB splits — the split
     # setting is ~irrelevant when per-file footers are small, so the
     # size-keyed rule CANNOT harmfully over-split a multi-file lake and
@@ -194,3 +202,53 @@ def test_rocksdb_state_store_tuning_pinned():
         ]
         == "false"
     )
+
+
+_LAUNCH_CHILD = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from ominimo_dynamic_data_pipeline_spark import get_spark
+
+spark = get_spark(input_bytes=10 << 30)
+rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+conf = {
+    "shuffle": spark.conf.get("spark.sql.shuffle.partitions"),
+    "split": spark.conf.get("spark.sql.files.maxPartitionBytes"),
+    "ansi": spark.conf.get("spark.sql.ansi.enabled"),
+    "heap_mb": rt.maxMemory() >> 20,
+}
+spark = get_spark(extra_conf={"spark.sql.shuffle.partitions": "9"})
+conf["extra_shuffle"] = spark.conf.get("spark.sql.shuffle.partitions")
+print("CONF " + json.dumps(conf))
+spark.stop()
+"""
+
+
+def test_launch_conf_wins_over_defaults_and_auto_posture():
+    # PYSPARK_SUBMIT_ARGS (like spark-submit --conf) is the deployment's
+    # override: 10 GB of input would auto-size 320 partitions and a
+    # multi-GB heap, and neither may replace what the launch set.
+    env = {
+        **os.environ,
+        "PYSPARK_SUBMIT_ARGS": (
+            "--conf spark.sql.shuffle.partitions=7 --driver-memory 1g "
+            "pyspark-shell"
+        ),
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", _LAUNCH_CHILD, str(REPO)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = next(x for x in proc.stdout.splitlines() if x.startswith("CONF "))
+    conf = json.loads(line[len("CONF "):])
+    assert conf["shuffle"] == "7"
+    assert conf["heap_mb"] <= 1024
+    # keys the launch leaves unset keep the auto-posture and defaults
+    assert conf["split"] == str(auto_max_partition_bytes(10 << 30))
+    assert conf["ansi"] == "false"
+    # an explicit extra_conf still beats the launch conf
+    assert conf["extra_shuffle"] == "9"

@@ -792,7 +792,9 @@ def test_no_data_batch_rule_reads_plan_node_classes(
     dim = load_table(spark, sf_dir, "customer")
     assert not dedup_only(ops.enriched_segment_counts(e, dim))
     # a static-side dedup holds no state; the streaming aggregate emits
-    fresh = ops.streaming_incremental_dedup(
+    from ominimo_dynamic_data_pipeline_spark.llm import dedup as D
+
+    fresh = D.incremental_exact_dedup(
         ops.read_documents_stream(spark, sf_dir),
         load_table(spark, sf_dir, "documents").select(F.md5("text").alias("fp")),
     )

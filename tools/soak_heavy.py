@@ -1,7 +1,7 @@
 """Heavy-tail soak runner: time the named catalog queries once each
 against a scale directory, under AUTO-POSTURE (zero env knobs — the
 session derives shuffle width and state-store provider from the
-dataset's on-disk bytes; tools/make_sf100.py generates the data).
+dataset's on-disk bytes; ``tools/make_sf.py sf100`` generates the data).
 
     python tools/soak_heavy.py <sf_dir> <query> [query ...]
 
@@ -14,18 +14,8 @@ Each per-query line also carries a RESOURCE PROBE (round-10: built to
 decompose the in-session streaming drag — q116 291.5 s as the session's
 12th query vs 160.5 s isolated): free disk, streaming scratch bytes,
 block-manager (shuffle/spill) bytes, and cumulative JVM GC millis, each
-read before/after.  Two opt-in between-query conditions isolate causes:
-
-    SPARK_GRAFT_SOAK_CLEANUP_BETWEEN=0   keep prior queries' scratch on
-                                         disk (reproduces the round-9
-                                         drag; cleanup-between is the
-                                         measured winner and the
-                                         default since round 10)
-    SPARK_GRAFT_SOAK_GC_BETWEEN=1        driver System.gc() after every
-                                         query — local mode's lever for
-                                         ContextCleaner-driven shuffle
-                                         file removal (tests the
-                                         stale-shuffle-files hypothesis)
+read before/after.  Each query's streaming scratch is removed before the
+next one starts (the measured winner over keeping it, round 10).
 """
 
 from __future__ import annotations
@@ -139,15 +129,10 @@ def main() -> int:
     # block-manager dir when Py4J tears down first — a soak session's
     # shuffle/spill files (tens of GB at sf100) must not outlive it,
     # INCLUDING on KeyboardInterrupt / unexpected exceptions mid-soak.
-    # DEFAULT-ON since round 10: each query's results are consumed (noop
+    # Cleanup between queries: each query's results are consumed (noop
     # write) before the next starts, and leaving prior sinks/checkpoints
     # on disk IS the measured late-session streaming drag (q116 at sf100:
-    # 323.3 s with 8 GB of dead scratch vs 227.6 s cleaned — the round-9
-    # carried finding, closed).  Set =0 to reproduce the drag.
-    cleanup_between = os.environ.get(
-        "SPARK_GRAFT_SOAK_CLEANUP_BETWEEN", "1"
-    ) != "0"
-    gc_between = os.environ.get("SPARK_GRAFT_SOAK_GC_BETWEEN", "") == "1"
+    # 323.3 s with 8 GB of dead scratch vs 227.6 s cleaned).
     try:
         for name in names:
             pre = probe(spark)
@@ -178,25 +163,18 @@ def main() -> int:
                     json.dumps({name: "ERROR", "err": repr(exc)[:200]}),
                     flush=True,
                 )
-            if cleanup_between:
-                try:
-                    from ominimo_dynamic_data_pipeline_spark.streaming.ops import (
-                        cleanup_scratch,
-                    )
+            try:
+                from ominimo_dynamic_data_pipeline_spark.streaming.ops import (
+                    cleanup_scratch,
+                )
 
-                    n = cleanup_scratch(spark)
-                    print(
-                        json.dumps({"cleanup_between": name, "roots": n}),
-                        flush=True,
-                    )
-                except Exception:
-                    pass
-            if gc_between:
-                try:
-                    spark.sparkContext._jvm.System.gc()
-                    print(json.dumps({"gc_between": name}), flush=True)
-                except Exception:
-                    pass
+                n = cleanup_scratch(spark)
+                print(
+                    json.dumps({"cleanup_between": name, "roots": n}),
+                    flush=True,
+                )
+            except Exception:
+                pass
         print(json.dumps({"summary": results}), flush=True)
     finally:
         # scratch before stop: results are consumed (noop-written) by

@@ -10,7 +10,7 @@ What it does beyond a plain ``oracle_check.py`` run:
 
   * points the comparison at the sf1 decade
     (``/root/repo/testdata_sf1`` by default — gitignored, regenerated
-    per fresh container via ``tools/make_sf1.py``; this script errors
+    per fresh container via ``tools/make_sf.py sf1``; this script errors
     loudly with that recipe if the directory is missing);
   * exports ``SPARK_GRAFT_ORACLE_SF_DIR`` into the child process
     BEFORE the package imports, so the data-derived literal oracles
@@ -53,7 +53,7 @@ def main() -> int:
         print(
             f"ERROR: {sf_dir} has no parquet tables.  The scale dirs are "
             "gitignored and vanish with a fresh container — regenerate "
-            "with `python tools/make_sf1.py` (~minutes of DuckDB time), "
+            "with `python tools/make_sf.py sf1` (~seconds of DuckDB time), "
             "then re-run.",
             file=sys.stderr,
         )
