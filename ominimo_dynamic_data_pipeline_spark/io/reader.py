@@ -34,65 +34,53 @@ _CSV_DEFAULTS = {
     "encoding": "UTF-8",
 }
 
+# Metadata format -> (Spark source name, default options that metadata
+# ``options`` override, whether a declared schema applies).
+#   * xml: native source (Spark >= 4.0), one row per ``rowTag`` element;
+#     rowTag defaults to "row" so metadata stays minimal, and nested
+#     elements land as structs/arrays for normalize_fields' recursive
+#     flattening.
+#   * text: one row per line (column ``value``); ``wholetext=true`` reads
+#     one row per file — raw-corpus ingestion for the text ops.
+#   * binaryfile: multimodal ingestion, (path, modificationTime, length,
+#     content) rows; narrow with ``pathGlobFilter`` (e.g. "*.jpg").
+_FORMATS: dict[str, tuple[str, Mapping[str, str], bool]] = {
+    "json": ("json", {}, True),
+    "csv": ("csv", _CSV_DEFAULTS, True),
+    "parquet": ("parquet", {}, True),
+    "orc": ("orc", {}, True),
+    "xml": ("xml", {"rowTag": "row"}, True),
+    "text": ("text", {}, False),
+    "binaryfile": ("binaryFile", {}, False),
+}
+
 
 def read_source(spark: SparkSession, source: Mapping[str, Any]) -> DataFrame:
     """Read one source spec ``{name, path, format, schema?, options?}``.
 
-    ``format`` is case-insensitive: JSON (json-lines), CSV, PARQUET.
-    ``path`` may be a string (globs allowed) or a list of paths.
+    ``format`` is case-insensitive: JSON (json-lines), CSV, PARQUET, ORC,
+    XML, TEXT, BINARYFILE.  ``path`` may be a string (globs allowed) or a
+    list of paths.
     """
     fmt = str(source.get("format", "parquet")).strip().lower()
+    if fmt not in _FORMATS:
+        raise ValueError(
+            f"Unsupported source format: {source.get('format')!r}"
+        )
+    name, defaults, takes_schema = _FORMATS[fmt]
     path = source["path"]
     paths = path if isinstance(path, list) else [path]
     schema = source.get("schema")  # DDL string, optional
-    options = dict(source.get("options") or {})
-
-    if fmt == "json":
-        reader = spark.read.options(**options)
-        if schema:
-            reader = reader.schema(schema)
-        return reader.json(paths)
-    if fmt == "csv":
-        opts = dict(_CSV_DEFAULTS)
-        opts.update(options)
-        reader = spark.read.options(**opts)
-        if schema:
-            reader = reader.schema(schema)
-        else:
-            # Without a declared schema, fall back to inference (reference
-            # behavior) — costs an extra scan; declare schemas at scale.
-            reader = reader.option("inferSchema", "true")
-        return reader.csv(paths)
-    if fmt == "parquet":
-        reader = spark.read.options(**options)
-        if schema:
-            reader = reader.schema(schema)
-        return reader.parquet(*paths)
-    if fmt == "orc":
-        reader = spark.read.options(**options)
-        if schema:
-            reader = reader.schema(schema)
-        return reader.orc(*paths)
-    if fmt == "text":
-        # One row per line (column ``value``); wholetext=true via options
-        # reads one row per file — raw-corpus ingestion for the text ops.
-        reader = spark.read.options(**options)
-        return reader.text(paths)
-    if fmt == "xml":
-        # Native XML source (Spark >= 4.0): one row per ``rowTag`` element,
-        # schema inferred unless declared.  rowTag defaults to "row" here so
-        # metadata stays minimal; nested elements land as structs/arrays and
-        # flow straight into normalize_fields' recursive flattening.
-        opts = {"rowTag": "row", **options}
-        reader = spark.read.format("xml").options(**opts)
-        if schema:
-            reader = reader.schema(schema)
-        return reader.load(paths)
-    if fmt == "binaryfile":
-        # Multimodal ingestion: (path, modificationTime, length, content)
-        # rows; narrow with options.pathGlobFilter (e.g. "*.jpg").
-        return spark.read.format("binaryFile").options(**options).load(paths)
-    raise ValueError(f"Unsupported source format: {source.get('format')!r}")
+    reader = spark.read.format(name).options(
+        **{**defaults, **(source.get("options") or {})}
+    )
+    if schema and takes_schema:
+        reader = reader.schema(schema)
+    elif fmt == "csv":
+        # Without a declared schema, fall back to inference (reference
+        # behavior) — costs an extra scan; declare schemas at scale.
+        reader = reader.option("inferSchema", "true")
+    return reader.load(paths)
 
 
 def read_sources(

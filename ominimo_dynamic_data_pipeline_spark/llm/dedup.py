@@ -17,8 +17,7 @@ Five strategies, all shuffle-disciplined for 100 TB corpora:
 
 Hash portability: every hash is derived from md5 (bit-identical across
 engines), so the DuckDB oracle can verify full pipelines — Spark's native
-xxhash64 would be faster but engine-private; swap via ``hash_fn`` if oracle
-parity is not needed.
+xxhash64 would be faster but engine-private.
 """
 
 from __future__ import annotations
@@ -236,8 +235,12 @@ def shingle_frame(
     the condition, and a condition containing the element_at lambda
     re-inlines tokens(text) per element — the same blow-up
     shingles_from_tokens documents (measured: 0.8 s -> 30+ s at sf0.01).
-    SQL-rendered ladders (construction-latency note at _md5_long_sql);
-    plans pinned identical to the Column-built form in tests."""
+    A plain ``explode(sh)`` over this frame unpersisted is such a
+    condition (InferFiltersFromGenerate plants ``size(sh) > 0``), so
+    consumers explode with ``explode_outer`` (minhash_signatures) or use
+    gram_frame.  SQL-rendered ladders (construction-latency note at
+    _md5_long_sql); plans pinned identical to the Column-built form in
+    tests."""
     toks = df.selectExpr(
         _ident(id_col), f"{_tokens_sql(text_col)} AS toks"
     ).filter(F.size(F.col("toks")) >= n)
@@ -315,93 +318,49 @@ def minhash_signatures(
     ~4 s) and products stay < 2^35, inside exact bigint range for both
     Spark and the DuckDB oracle.
 
-    Two physical forms, same results (round-12 optimization):
+    Shape: the shingle arrays (``shingles``, persisted or not, else
+    shingle_frame) EXPLODE into (id, shingle) rows, md5 is staged once
+    per row, and all ``num_hashes`` minima run as ONE whole-stage-codegen
+    hash aggregate, never a per-row ladder of array higher-order
+    functions: those are CodegenFallback (interpreted per element,
+    boxed) and measured 1.7-1.9x slower at sf0.1, on persisted and
+    unpersisted input alike.  A MIN is insensitive to duplicates, so
+    the exploded multiset needs no dedup; partial aggregation reduces to
+    one 17-column row per (doc, map task) before the exchange, so the
+    added shuffle carries ~``8*(num_hashes+1)`` bytes/doc at any corpus
+    size.
 
-    * ``shingles`` provided AND persisted (every hot-path caller — the
-      catalog queries all run ``cache_shingles=True``): the cached
-      arrays EXPLODE into (id, shingle) rows, md5 is staged once per
-      row, and all ``num_hashes`` minima run as ONE whole-stage-codegen
-      hash aggregate.  Array higher-order functions are CodegenFallback
-      (interpreted per element, boxed) — the explode+agg form measured
-      1.70 s -> 0.90 s at sf0.1, collect-identical.  A MIN is
-      insensitive to duplicates, so the exploded multiset needs no
-      dedup; partial aggregation reduces to one 17-column row per
-      (doc, map task) before the exchange, so the added shuffle carries
-      ~``8*(num_hashes+1)`` bytes/doc at any corpus size.  The
-      InMemoryRelation boundary makes the explode safe
-      (InferFiltersFromGenerate cannot re-inline the tokenize chain —
-      the gram_frame blow-up).
-    * otherwise: the per-row HOF ladder (text -> toks -> sh -> hs ->
-      mins staged projections, zero shuffle).  Exploding an UNPERSISTED
-      shingle frame would re-inline ``tokens()`` into the inferred
-      Generate filter (O(grams x tokens) regex passes — see
-      gram_frame), and a window-assembled gram stream would shuffle
-      text; interpreted minima are the cheaper evil here.  The guard is
-      the frame's actual storage level, not the argument's presence, so
-      an unpersisted shared frame still degrades safely.
-
-    Edge divergence between the two forms (caller-supplied frames only):
-    a doc whose ``sh`` array is EMPTY is dropped by the explode+agg path
-    but emitted with NULL mh_i columns by the HOF path.  shingle_frame
-    never produces empty arrays (its ``>= n`` token filter guarantees
-    >= 1 shingle), so every in-repo caller sees identical results; a
-    caller-supplied ``shingles`` frame must uphold the same no-empty-
-    arrays contract.
+    The generator is ``explode_outer`` plus a not-null filter on its
+    output, never a plain ``explode``: InferFiltersFromGenerate plants
+    ``size(sh) > 0`` under a plain explode, and on an unpersisted
+    shingle_frame predicate pushdown substitutes the alias chain into it
+    and re-inlines tokenize into the element_at lambda (the gram_frame
+    blow-up; pinned in tests).  The outer generator infers no filter, and
+    the filter above it references only the exploded column.  A doc
+    whose ``sh`` array is empty or NULL therefore emits no row, like a
+    doc with no shingles at all.
     """
-    lo_mask = F.lit((1 << 30) - 1)
-    prime = F.lit(MINHASH_PRIME)
-    if shingles is not None and (
-        shingles.storageLevel.useMemory or shingles.storageLevel.useDisk
-    ):
-        # SQL-rendered ladder (construction-latency note at _md5_long_sql;
-        # optimized plan pinned identical to the Column-built form)
-        hashed = shingles.select(
-            _col(id_col), F.explode("sh").alias("_sg")
-        ).selectExpr(_ident(id_col), f"{_md5_long_sql('_sg')} AS _h")
-        lo_sql = f"(_h & {(1 << 30) - 1})"
-        return hashed.groupBy(_col(id_col)).agg(
-            *[
-                F.expr(
-                    f"min((shiftright(_h, 30) + {i + 1} * {lo_sql})"
-                    f" % {MINHASH_PRIME}) AS mh_{i}"
-                )
-                for i in range(num_hashes)
-            ]
-        )
     sh_df = (
         shingles
         if shingles is not None
         else shingle_frame(df, id_col, text_col, shingle_n)
     )
-    # Stage base hashes, then the split halves, each from the previous
-    # attribute (one md5 per shingle; per-(i, shingle) work in the nested
-    # transform is then one multiply-add-mod).
-    hs_df = sh_df.select(
-        _col(id_col),
-        F.transform(F.col("sh"), lambda s: md5_long(s)).alias("hs"),
-    ).select(
-        _col(id_col),
-        F.transform(F.col("hs"), lambda h: F.shiftright(h, 30)).alias("hi"),
-        F.transform(F.col("hs"), lambda h: h.bitwiseAND(lo_mask)).alias("lo"),
+    # SQL-rendered ladder (construction-latency note at _md5_long_sql;
+    # optimized plan pinned identical to the Column-built form)
+    hashed = (
+        sh_df.select(_col(id_col), F.explode_outer("sh").alias("_sg"))
+        .filter(F.col("_sg").isNotNull())
+        .selectExpr(_ident(id_col), f"{_md5_long_sql('_sg')} AS _h")
     )
-    # All num_hashes minima in ONE nested transform (array column), then
-    # element extraction: ~2.6x faster than num_hashes separate HOF columns
-    # (each top-level HOF column pays its own interpreted-eval setup).
-    mins = F.transform(
-        F.sequence(F.lit(1), F.lit(num_hashes)),
-        lambda i: F.array_min(
-            F.zip_with(
-                F.col("hi"), F.col("lo"), lambda h, l: (h + i * l) % prime
+    lo_sql = f"(_h & {(1 << 30) - 1})"
+    return hashed.groupBy(_col(id_col)).agg(
+        *[
+            F.expr(
+                f"min((shiftright(_h, 30) + {i + 1} * {lo_sql})"
+                f" % {MINHASH_PRIME}) AS mh_{i}"
             )
-        ),
-    )
-    mins_df = hs_df.select(_col(id_col), mins.alias("mins"))
-    # No null filter here: shingle_frame already dropped shingle-less docs,
-    # and a predicate on mh_i would be pushed down with the whole expression
-    # chain substituted in (see shingle_frame docstring).
-    return mins_df.select(
-        _col(id_col),
-        *[F.col("mins")[i].alias(f"mh_{i}") for i in range(num_hashes)],
+            for i in range(num_hashes)
+        ]
     )
 
 
@@ -669,23 +628,24 @@ def minhash_near_dups(
     threshold: float = 0.5,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    cache_shingles: bool = False,
 ) -> DataFrame:
     """Full near-dup pipeline: signatures -> band candidates -> exact
     Jaccard filter at ``threshold``.  ``max_bucket_size`` is the LSH skew
     guard (see minhash_band_candidates).
 
-    ``cache_shingles`` persists the shingle frame (MEMORY_AND_DISK), which
-    otherwise appears three times in the plan — under the signature
-    pipeline and on both sides of the Jaccard verify join — so the
-    tokenize+shingle work runs once instead of three times.  The cached
-    frame is (id, shingle array), tiny relative to the corpus; Spark's
-    LRU evicts it when memory is needed."""
-    sh = shingle_frame(df, id_col, text_col, shingle_n)
-    if cache_shingles:
-        from pyspark import StorageLevel
+    The shingle frame is persisted (MEMORY_AND_DISK): it appears three
+    times in the plan — under the signature pipeline and on both sides
+    of the Jaccard verify join — so the tokenize+shingle work runs once
+    instead of three times.  The cached frame is (id, shingle array),
+    tiny relative to the corpus; Spark's LRU evicts it when memory is
+    needed.  It is a plain persist, not a tracked one: the cache is keyed
+    by logical plan, so a second identical call in the same session (q49
+    after q26) reuses the first call's frame."""
+    from pyspark import StorageLevel
 
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = shingle_frame(df, id_col, text_col, shingle_n).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     sigs = minhash_signatures(
         df, id_col, text_col, num_hashes, shingle_n, shingles=sh
     )
@@ -697,58 +657,28 @@ def minhash_near_dups(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def simhash(col: Column, bits: int = 64) -> Column:
-    """SimHash over whitespace tokens: per bit, sign of the sum of
-    (+1 / -1) contributions from each distinct token's hash bit.
-
-    Built from two portable 60-bit md5 hashes (bits 0-59 from seed 101,
-    60+ from seed 202) so the oracle can replicate.  Per-row, shuffle-free.
-
-    Column-helper form for small frames/tests: the token hashes are inline,
-    so every bit recomputes them (O(bits) md5 passes per row).  Hot paths
-    must use ``simhash_frame``, which stages the hash array once."""
-    toks = F.array_distinct(tokens(col))
-
-    def bit_sum(i: int) -> Column:
-        seed, off = (101, i) if i < 60 else (202, i - 60)
-        return F.aggregate(
-            toks,
-            F.lit(0),
-            lambda acc, t: acc
-            + F.when(F.shiftright(md5_long(t, seed=seed), off).bitwiseAND(1) == 1, 1).otherwise(-1),
-        )
-
-    out = F.lit(0).cast("bigint")
-    for i in range(bits):
-        out = out + F.when(
-            bit_sum(i) > 0, F.shiftleft(F.lit(1).cast("bigint"), i)
-        ).otherwise(F.lit(0).cast("bigint"))
-    return out.cast("bigint")
-
-
 def simhash_frame(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     bits: int = 64,
 ) -> DataFrame:
-    """(id, sig) SimHash frame (the hot-path twin of the ``simhash``
-    column helper; identical signatures).
+    """(id, sig) SimHash frame: per bit, the sign of the sum of
+    (+1 / -1) contributions from each distinct whitespace token's hash
+    bit.  The token hashes are two portable 60-bit md5 hashes (bits 0-59
+    from seed 101, 60+ from seed 202), so the oracle can replicate them.
 
-    Round-12 shape — explode + ONE codegen hash aggregate (the
-    minhash_signatures precedent): distinct tokens EXPLODE to
-    (id, token) rows, each token is md5-hashed once per seed (seed 101
-    for bits 0-59, 202 above), and all ``bits`` sign sums run as one
-    whole-stage-codegen aggregate; the signature assembles from the
-    summed signs in a plain projection.  Integer sums are
-    order-insensitive, so results are bit-identical to the previous
-    per-row form (staged projections whose per-bit sign sums ran
-    through ``F.aggregate`` — CodegenFallback, interpreted per array
-    element).  The added exchange carries ~``8 * (bits + 1)`` bytes per
-    doc at any corpus size; map-side partial aggregation reduces the
-    exploded stream before it.  Exploding is safe here because the
-    Generate input is the raw tokenize expression (the inferred
-    size() > 0 filter re-evaluates tokens() once per row, the same
-    cost the previous emptiness filter paid — never the O(grams x
-    tokens) shingle-lambda blow-up gram_frame documents)."""
+    Shape — explode + ONE codegen hash aggregate (the
+    minhash_signatures shape): distinct tokens EXPLODE to (id, token)
+    rows, each token is md5-hashed once per seed, and all ``bits`` sign
+    sums run as one whole-stage-codegen aggregate; the signature
+    assembles from the summed signs in a plain projection (integer sums
+    are order-insensitive, so the exchange cannot change a bit).  The
+    added exchange carries ~``8 * (bits + 1)`` bytes per doc at any
+    corpus size; map-side partial aggregation reduces the exploded
+    stream before it.
+    Exploding is safe here because the Generate input is the raw
+    tokenize expression, not an attribute, so InferFiltersFromGenerate
+    plants no filter that could re-inline it — never the O(grams x
+    tokens) shingle-lambda blow-up gram_frame documents."""
     toks = df.select(
         _col(id_col),
         F.explode(F.array_distinct(tokens(_col(text_col)))).alias("_t"),
@@ -1027,62 +957,6 @@ def embedding_near_dups(
         )
         .filter(F.col("cos") >= threshold)
     )
-
-
-def embedding_near_dups_blas(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Brute-force embedding near-dup pairs via an Arrow-batched numpy
-    kernel (mapInPandas) — the fast path for the all-pairs baseline.
-
-    TEST/VERIFICATION BASELINE ONLY — this collects the full corpus to the
-    driver and closes over it, which presumes the corpus fits one machine.
-    The catalog / 100 TB path is similarity.embedding_near_dups_lsh
-    (per-bucket Arrow kernel, no driver collect); the Catalyst twin is
-    embedding_near_dups(bucket_col=...).  Sums are accumulated
-    dimension-by-dimension (vectorized across pairs), which is bit-identical
-    to the sequential fold both the Catalyst path and the DuckDB oracle
-    compute — same doubles, ~15x less wall clock than the interpreted
-    higher-order functions (sf0.1: 30 s -> ~2 s).
-    """
-    import numpy as np
-
-    id_field = df.schema[id_col].dataType.simpleString()
-    pdf_all = df.select(_col(id_col), vec_col).toPandas()
-    ids_all = pdf_all[id_col].to_numpy()
-    x_all = np.stack(pdf_all[vec_col].to_numpy()).astype(np.float64)
-    n, dim = x_all.shape
-    acc = np.zeros(n)
-    for d in range(dim):
-        acc += x_all[:, d] * x_all[:, d]
-    nrm_all = np.sqrt(acc)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids_b = pdf[id_col].to_numpy()
-            x_b = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            acc_b = np.zeros(len(ids_b))
-            dots = np.zeros((len(ids_b), n))
-            for d in range(dim):
-                acc_b += x_b[:, d] * x_b[:, d]
-                dots += np.outer(x_b[:, d], x_all[:, d])
-            cos = dots / np.outer(np.sqrt(acc_b), nrm_all)
-            ia, ib = np.nonzero(
-                (ids_b[:, None] < ids_all[None, :]) & (cos >= threshold)
-            )
-            yield pd.DataFrame(
-                {"id_a": ids_b[ia], "id_b": ids_all[ib], "cos": cos[ia, ib]}
-            )
-
-    schema = f"id_a {id_field}, id_b {id_field}, cos double"
-    return df.select(_col(id_col), vec_col).mapInPandas(kernel, schema)
 
 
 def dedup_clusters(
@@ -1548,7 +1422,6 @@ def shingle_join_candidates(
     text_col: str = "text",
     shingle_n: int = 3,
     max_df: int = 20,
-    shingles: DataFrame | None = None,
     max_pairs: int | None = 2_000_000,
 ) -> DataFrame:
     """Candidate pairs sharing at least one RARE shingle (document
@@ -1577,11 +1450,7 @@ def shingle_join_candidates(
     """
     from pyspark.sql.window import Window
 
-    posts = (
-        shingles
-        if shingles is not None
-        else gram_frame(df, id_col, text_col, shingle_n)
-    )
+    posts = gram_frame(df, id_col, text_col, shingle_n)
     w = Window.partitionBy("gram")
     tagged = posts.withColumn("_df", F.count(F.lit(1)).over(w))
     rare = tagged.filter(F.col("_df") <= max_df)
@@ -1626,40 +1495,22 @@ def containment_near_dups(
     max_df: int = 20,
     threshold: float = 0.5,
     max_pairs: int | None = 2_000_000,
-    cache_shingles: bool = False,
 ) -> DataFrame:
     """Full asymmetric-containment pipeline: rare-shingle inverted-index
     candidates -> exact containment/jaccard scores -> keep pairs whose
     GREATEST one-sided containment clears ``threshold``.
 
-    ``cache_shingles`` persists the shingle frame (one-generation-
-    tracked, the minhash_near_dups discipline) so the tokenize+shingle
-    pass runs once instead of three times.  Default OFF because it
-    MEASURES SLOWER on this workload (same-session back-to-back at sf1:
-    10.7 s off -> 12.3 s on; sf0.1 neutral-to-worse 5.6 -> 5.8 s): the
-    re-computed path is cheap string work fully inside whole-stage
+    No shingle cache: the candidates re-derive their postings through
+    gram_frame and the scorer builds its own shingle frame.  Sharing one
+    persisted shingle frame MEASURED SLOWER (same-session back-to-back
+    at sf1: 10.7 s recompute -> 12.3 s cached; sf0.1 5.6 -> 5.8 s): the
+    recomputed path is cheap string work fully inside whole-stage
     codegen, while the cache pays array materialization plus a
-    cached-array explode that breaks the codegen span — recompute beats
-    cache until the text column is wide enough that three tokenize
-    passes dominate those costs.
-    Exploding the PERSISTED frame is safe (the InMemoryRelation
-    boundary stops the InferFiltersFromGenerate re-inline gram_frame
-    documents); never explode an un-persisted shingle_frame.
+    cached-array explode that breaks the codegen span.
     """
-    if cache_shingles:
-        sh = _persist_tracked(
-            "containment_near_dups",
-            shingle_frame(df, id_col, text_col, shingle_n),
-        )
-        posts = sh.select(_col(id_col), F.explode("sh").alias("gram"))
-    else:
-        # default path: candidates re-derive via gram_frame and the
-        # scorer builds its own shingle frame — no dead lineage here
-        sh = None
-        posts = None
     cand = shingle_join_candidates(
         df, id_col, text_col, shingle_n,
-        max_df=max_df, shingles=posts, max_pairs=max_pairs,
+        max_df=max_df, max_pairs=max_pairs,
     )
     # threshold applies INSIDE the scorer on the raw staged ratios (via
     # the exact duck_round_cutoff preimage): a filter on the rounded
@@ -1667,8 +1518,7 @@ def containment_near_dups(
     # expression into the pair join (measured: 20 array_intersect in the
     # join condition vs 2 raw-ratio copies)
     return containment_scores(
-        df, cand, id_col, text_col, shingle_n, shingles=sh,
-        min_containment=threshold,
+        df, cand, id_col, text_col, shingle_n, min_containment=threshold,
     )
 
 
@@ -1678,7 +1528,6 @@ def containment_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    shingles: DataFrame | None = None,
     min_containment: float | None = None,
 ) -> DataFrame:
     """Exact shingle CONTAINMENT for candidate pairs: |A∩B| / |A| and
@@ -1695,11 +1544,7 @@ def containment_scores(
     rounded-threshold preimage (duck_round_cutoff), equivalent row-set
     to ``greatest(containment_a, containment_b) >= t`` on the rounded
     outputs but pushdown-cheap (see containment_near_dups)."""
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_frame(df, id_col, text_col, shingle_n)
-    )
+    sh = shingle_frame(df, id_col, text_col, shingle_n)
     a = sh.alias("sa")
     b = sh.alias("sb")
     # The candidate rows are tiny in BYTES but heavy in per-row COMPUTE

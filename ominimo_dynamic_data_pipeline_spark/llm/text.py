@@ -117,15 +117,6 @@ def quality_features(
     )
 
 
-def language_scores(col: Column) -> dict[str, Column]:
-    """Marker-hit counts per language for the given text column."""
-    toks = tokens(col)
-    return {
-        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(m) for m in markers])))
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language ID: the language with the most distinct marker
     hits; deterministic tie-break by fixed language order; 'und' when no
@@ -181,30 +172,6 @@ def term_frequencies(
     if min_count > 1:
         out = out.filter(F.col("tf") >= min_count)
     return out
-
-
-def ngrams_from_tokens(toks: Column, n: int = 2) -> Column:
-    """Word n-grams from a materialized token-array column (no UDF).
-
-    Pass an attribute reference, not an inline expression: element_at runs
-    inside a lambda where Spark re-evaluates argument expressions per
-    element (no subexpression elimination) — see dedup.shingles_from_tokens.
-    """
-    k = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(k - n, F.lit(-1)))
-    return F.when(
-        k >= n,
-        F.transform(
-            idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)])
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def ngrams(col: Column, n: int = 2) -> Column:
-    """Word n-grams of a raw text column.  Convenience wrapper for small
-    frames/tests; hot paths should stage ``tokens`` as a projection and use
-    ``ngrams_from_tokens`` (per-element re-evaluation cost otherwise)."""
-    return ngrams_from_tokens(tokens(col), n)
 
 
 def tf_idf(
@@ -605,7 +572,8 @@ def span_corrupt(
     offset = md5(doc) % stride; the sentinel number is the raw run
     index (p + offset) // stride.  Pure staged projections riding the
     scan — no shuffle, no UDF; array lambdas only touch MATERIALIZED
-    token columns (the shingles_from_tokens element_at discipline)."""
+    token columns (the element_at discipline of shingle_frame's staged
+    ``toks`` projection)."""
     if not (0 < span_len < stride):
         raise ValueError("span_corrupt: need 0 < span_len < stride")
     from ominimo_dynamic_data_pipeline_spark.llm.dedup import md5_long

@@ -606,7 +606,10 @@ def _op_near_dedup(ctx: CompileContext, step: Mapping[str, Any]) -> None:
     """MinHash-LSH near-duplicate removal: band-bucket candidates, exact
     Jaccard verify at ``threshold``, greedy keep-lowest-id victim drop
     (broadcast left-anti).  The victim pipeline is the q26/q49 shape —
-    sum(|bucket|^2) candidate cost with the max_bucket_size skew guard."""
+    sum(|bucket|^2) candidate cost with the max_bucket_size skew guard,
+    and one persisted shingle frame feeding the signature and verify
+    stages.  Params: ``id_col``, ``text_col``, ``num_hashes``, ``bands``,
+    ``threshold``, ``shingle_n``, ``max_bucket_size``."""
     from ominimo_dynamic_data_pipeline_spark.llm.dedup import (
         dedup_corpus,
         minhash_near_dups,
@@ -624,7 +627,6 @@ def _op_near_dedup(ctx: CompileContext, step: Mapping[str, Any]) -> None:
         threshold=params.get("threshold", 0.5),
         shingle_n=params.get("shingle_n", 3),
         max_bucket_size=params.get("max_bucket_size"),
-        cache_shingles=params.get("cache_shingles", True),
     )
     ctx.put(out_name, dedup_corpus(df, pairs, params.get("id_col", "doc_id")))
 
@@ -1030,8 +1032,8 @@ def _op_group_quota_cap(ctx: CompileContext, step: Mapping[str, Any]) -> None:
 def _op_near_dup_pairs(ctx: CompileContext, step: Mapping[str, Any]) -> None:
     """Emit the MinHash-LSH near-dup PAIR frame (id_a/id_b/jaccard)
     instead of dropping victims — the candidate-graph building block
-    cluster_safe_split and custom linkage flows consume.  Same params as
-    ``near_dedup``."""
+    cluster_safe_split and custom linkage flows consume.  Same params and
+    the same persisted shingle frame as ``near_dedup``."""
     from ominimo_dynamic_data_pipeline_spark.llm.dedup import minhash_near_dups
 
     params = step.get("params", {})
@@ -1047,7 +1049,6 @@ def _op_near_dup_pairs(ctx: CompileContext, step: Mapping[str, Any]) -> None:
             threshold=params.get("threshold", 0.5),
             shingle_n=params.get("shingle_n", 3),
             max_bucket_size=params.get("max_bucket_size"),
-            cache_shingles=params.get("cache_shingles", True),
         ),
     )
 

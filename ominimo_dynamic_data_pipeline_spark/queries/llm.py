@@ -297,11 +297,10 @@ def _minhash_sql(
 @query("q26_minhash_near_dups", _minhash_sql())
 def q26_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # cache_shingles: the persisted shingle frame is keyed by logical plan,
+    # minhash_near_dups persists its shingle frame, keyed by logical plan,
     # so q49's identical pipeline reuses it within the same session.
     out = D.minhash_near_dups(
-        d, threshold=0.5, cache_shingles=True,
-        max_bucket_size=MINHASH_MAX_BUCKET,
+        d, threshold=0.5, max_bucket_size=MINHASH_MAX_BUCKET
     )
     return out.withColumn("jaccard", duck_round_expr("jaccard", 6))
 
@@ -928,8 +927,7 @@ def _dedup_corpus_sql() -> str:
 def q49_dedup_corpus_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_near_dups(
-        d, threshold=0.5, cache_shingles=True,
-        max_bucket_size=MINHASH_MAX_BUCKET,
+        d, threshold=0.5, max_bucket_size=MINHASH_MAX_BUCKET
     )
     return D.dedup_corpus(d, pairs).select("doc_id", "lang")
 
@@ -972,8 +970,7 @@ def _dedup_clusters_sql() -> str:
 def q57_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_near_dups(
-        d, threshold=0.5, cache_shingles=True,
-        max_bucket_size=MINHASH_MAX_BUCKET,
+        d, threshold=0.5, max_bucket_size=MINHASH_MAX_BUCKET
     )
     return D.dedup_clusters(pairs)
 
@@ -1024,8 +1021,7 @@ def q191_cluster_canonical_docs(
 ) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_near_dups(
-        d, threshold=0.5, cache_shingles=True,
-        max_bucket_size=MINHASH_MAX_BUCKET,
+        d, threshold=0.5, max_bucket_size=MINHASH_MAX_BUCKET
     )
     clusters = D.dedup_clusters(pairs)
     return D.cluster_representatives(
@@ -1067,8 +1063,7 @@ def q195_near_dup_source_matrix(
 ) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_near_dups(
-        d, threshold=0.5, cache_shingles=True,
-        max_bucket_size=MINHASH_MAX_BUCKET,
+        d, threshold=0.5, max_bucket_size=MINHASH_MAX_BUCKET
     )
     src = d.select("doc_id", "source")
     lab = (
@@ -2818,8 +2813,7 @@ def q144_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     pairs = D.minhash_near_dups(
-        d, threshold=0.5, cache_shingles=True,
-        max_bucket_size=MINHASH_MAX_BUCKET,
+        d, threshold=0.5, max_bucket_size=MINHASH_MAX_BUCKET
     )
     return cluster_safe_split(
         d, pairs, val_frac=0.1, test_frac=0.1,
@@ -2930,9 +2924,9 @@ _Q146_MAX_PAIRS = 2_000_000  # mirrors shingle_join_candidates' default
 )
 def q146_containment_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # single-call pipeline; cache_shingles stays OFF — the shared-persist
-    # variant measures SLOWER same-session (sf1: 10.7 -> 12.3 s; see
-    # containment_near_dups's docstring for why recompute wins here)
+    # single-call pipeline; no shingle cache — a shared persist measured
+    # SLOWER same-session (sf1: 10.7 -> 12.3 s; see containment_near_dups's
+    # docstring for why recompute wins here)
     return D.containment_near_dups(
         d, max_df=_Q146_MAX_DF, threshold=_Q146_THRESHOLD,
         max_pairs=_Q146_MAX_PAIRS,
@@ -4390,8 +4384,7 @@ def _q176_sql() -> str:
 def q176_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_near_dups(
-        d, threshold=0.5, cache_shingles=True,
-        max_bucket_size=MINHASH_MAX_BUCKET,
+        d, threshold=0.5, max_bucket_size=MINHASH_MAX_BUCKET
     )
     cl = D.dedup_clusters(pairs)
     sizes = cl.groupBy("cluster_id").agg(

@@ -308,8 +308,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the configured SparkSession.
 
-    ``master`` defaults to ``local[N]`` where N comes from
-    ``$SPARK_GRAFT_CPUS`` (driver contract) or all cores.
+    Master, highest first: the ``master`` argument; the launch's master
+    (``spark-submit --master`` / ``PYSPARK_SUBMIT_ARGS``) unless it is the
+    launcher's default ``local[*]``; ``local[N]`` with N from
+    ``$SPARK_GRAFT_CPUS`` (driver contract); ``local[*]``.
 
     ``input_bytes`` (e.g. ``estimate_input_bytes(sf_dir)``) enables
     auto-posture for the driver heap, the shuffle width
@@ -326,9 +328,6 @@ def get_spark(
     """
     from pyspark import SparkConf, SparkContext
 
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
     conf = dict(_DEFAULTS)
     # static conf — only applies to a FRESH JVM; getOrCreate reuses an
     # existing session's heap unchanged
@@ -356,6 +355,12 @@ def get_spark(
         )
     )
     launch = dict(SparkConf().getAll())
+    if master is None:
+        # the launcher writes local[*] when no --master was given
+        master = launch.get("spark.master", "local[*]")
+        if master == "local[*]":
+            cpus = os.environ.get("SPARK_GRAFT_CPUS")
+            master = f"local[{cpus}]" if cpus else "local[*]"
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in conf.items():
         if k not in launch or k in extra_conf:

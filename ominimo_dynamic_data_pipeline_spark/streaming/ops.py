@@ -27,6 +27,8 @@ from typing import Any, Callable, Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ominimo_dynamic_data_pipeline_spark.session import estimate_input_bytes
+
 # Synthetic-fixture schema (epoch-nanos ts as bigint) used by tests that
 # write their own event files; the real testdata schema is read from the
 # parquet footer in read_events_stream.
@@ -395,20 +397,13 @@ def sized_state_partitions(
 
 def dataset_bytes(sf_dir: str, table: str = "events.parquet") -> int:
     """On-disk bytes of one source table (file or directory-style parquet
-    dataset; getsize on a directory dirent returns ~4 KB and would
-    silently collapse sizing, so data files are summed).  Shared by
-    state-partition sizing and the auto state-store choice."""
+    dataset; session.estimate_input_bytes sums the data files, because
+    getsize on a directory dirent returns ~4 KB and would silently
+    collapse sizing).  Shared by state-partition sizing and the auto
+    state-store choice."""
     import os
 
-    path = os.path.join(sf_dir, table)
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-    return os.path.getsize(path) if os.path.isfile(path) else 0
+    return estimate_input_bytes(os.path.join(sf_dir, table))
 
 
 # Per-run micro-batch accounting, keyed by query_name: bench.py reads this

@@ -49,10 +49,14 @@ def test_token_counts(spark):
 
 
 def test_ngrams(spark):
-    df = spark.createDataFrame([("a b c d",), ("a b",)], schema="text string")
-    out = df.select(T.ngrams(F.col("text"), 3).alias("g")).collect()
-    assert out[0]["g"] == ["a b c", "b c d"]
-    assert out[1]["g"] == []
+    df = spark.createDataFrame(
+        [(0, "a b c d"), (1, "a b"), (2, "a b a b a")],
+        schema="doc_id bigint, text string",
+    )
+    out = {r["doc_id"]: r["sh"] for r in D.shingle_frame(df, n=3).collect()}
+    assert out[0] == ["a b c", "b c d"]
+    assert 1 not in out  # fewer than n tokens: no shingles, no row
+    assert out[2] == ["a b a", "b a b"]  # distinct, first-seen order
 
 
 def test_exact_dedup_collapses_normalized_duplicates(docs):
@@ -79,9 +83,7 @@ def test_minhash_finds_planted_near_dup(docs):
 def test_simhash_deterministic_and_close_for_near_dups(spark, docs):
     sigs = {
         r["doc_id"]: r["sig"]
-        for r in docs.filter(F.col("text") != "")
-        .select("doc_id", D.simhash(F.col("text"), bits=16).alias("sig"))
-        .collect()
+        for r in D.simhash_frame(docs, bits=16).collect()
     }
     assert sigs[0] == sigs[2]  # normalization-identical docs
     ham_near = bin(sigs[0] ^ sigs[1]).count("1")
@@ -221,29 +223,6 @@ def test_language_id_markers(spark):
     assert out[0] == "en"
     assert out[1] == "es"
     assert out[2] == "und"
-
-
-def test_embedding_near_dups_blas_matches_catalyst(spark):
-    import random
-
-    rnd = random.Random(7)
-    vecs = [
-        (i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(60)
-    ]
-    vecs.append((60, [v * 1.0 for v in vecs[0][1]]))  # exact dup of 0
-    df = spark.createDataFrame(
-        vecs, schema="vec_id bigint, embedding array<double>"
-    )
-    a = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in D.embedding_near_dups(df, threshold=0.5).collect()
-    }
-    b = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in D.embedding_near_dups_blas(df, threshold=0.5).collect()
-    }
-    assert a == b  # bit-identical doubles, same pair set
-    assert (0, 60) in a and math.isclose(a[(0, 60)], 1.0, rel_tol=1e-12)
 
 
 def test_embedding_near_dups_lsh_subset_of_bruteforce(spark):
@@ -462,8 +441,8 @@ def test_shingle_frame_quotes_backticked_column_names(docs):
     sim = D.simhash_frame(odd, **names)
     assert sim.columns == ["doc`id", "sig"]
     assert set(sim.collect()) == set(D.simhash_frame(docs).collect())
-    # minhash: the HOF ladder (no persisted shingles) and the
-    # explode+agg form over a persisted shingle frame
+    # minhash: built from the text, and over a persisted caller-supplied
+    # shingle frame
     want_mh = set(D.minhash_signatures(docs).collect())
     assert set(D.minhash_signatures(odd, **names).collect()) == want_mh
     sh = D.shingle_frame(odd, **names).cache()
@@ -473,6 +452,26 @@ def test_shingle_frame_quotes_backticked_column_names(docs):
         assert set(mh.collect()) == want_mh
     finally:
         sh.unpersist()
+
+
+def test_minhash_signatures_emit_no_row_for_empty_shingle_arrays(spark):
+    # a caller-supplied shingle frame may hold empty (or NULL) arrays: such
+    # a doc has no shingles and emits no row, whether or not the frame is
+    # persisted; the other docs keep their signatures
+    sh = spark.createDataFrame(
+        [(0, ["a b c", "b c d"]), (1, []), (2, None)],
+        schema="doc_id bigint, sh array<string>",
+    )
+    want = D.minhash_signatures(sh, shingles=sh.filter("doc_id = 0")).collect()
+    assert len(want) == 1
+    assert sh.storageLevel.useMemory is False
+    assert D.minhash_signatures(sh, shingles=sh).collect() == want
+    cached = sh.persist()
+    try:
+        cached.count()
+        assert D.minhash_signatures(sh, shingles=cached).collect() == want
+    finally:
+        cached.unpersist()
 
 
 def test_rolling_fingerprint_is_order_sensitive(spark):
@@ -2049,20 +2048,6 @@ def test_q163_retrieval_eval_metric_floors(spark):
         assert r["mrr"] > 0.0
         assert r["n_hits"] <= r["n_truth"] == 10
     assert sum(r["recall"] for r in rows) / len(rows) >= 0.6
-
-
-def test_containment_near_dups_cache_variants_agree(spark, docs):
-    """The single-call containment pipeline returns identical pairs with
-    and without the shared-persist shingle cache (the cache is a purely
-    physical choice; default OFF is a measured decision, not semantic)."""
-    off = D.containment_near_dups(docs, max_df=10, threshold=0.3)
-    on = D.containment_near_dups(
-        docs, max_df=10, threshold=0.3, cache_shingles=True
-    )
-    assert sorted(map(tuple, off.collect())) == sorted(
-        map(tuple, on.collect())
-    )
-    D.release_persisted("containment_near_dups")
 
 
 def test_q167_calibration_reports_full_recall_on_this_corpus(spark):

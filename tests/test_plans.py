@@ -888,6 +888,33 @@ def test_expensive_exprs_not_duplicated_in_plan(q, name):
         )
 
 
+def test_minhash_signatures_one_form_without_tokenize_reinline(spark, sf_dir):
+    # minhash_signatures has one physical form for every input: explode
+    # the shingle arrays, one hash aggregate.  Over an UNPERSISTED
+    # shingle_frame a plain explode's inferred size(sh) > 0 filter would
+    # be pushed down with the alias chain substituted, re-inlining the
+    # tokenize chain into the element_at lambda; explode_outer infers no
+    # filter, so the plan keeps shingle_frame's own tokenize count.
+    from ominimo_dynamic_data_pipeline_spark.llm import dedup as D
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base = optimized(D.shingle_frame(d))
+    for sigs in (
+        D.minhash_signatures(d),
+        D.minhash_signatures(d, shingles=D.shingle_frame(d)),
+    ):
+        p = optimized(sigs)
+        assert "zip_with" not in p and "array_min" not in p, p
+        # the only lambdas are shingle_frame's own (tokens, grams)
+        assert p.count("transform(") == base.count("transform("), p
+        assert p.count("lambdafunction(") == base.count("lambdafunction(")
+        assert "Generate explode(sh" in p and "Aggregate" in p, p
+        assert p.count("regexp_replace") <= base.count("regexp_replace"), p
+
+
 def test_duck_round_staging_contract(spark):
     # duck_round_expr's cheap-argument contract: the rounding tree
     # references its argument ~10x.  Since round 13 the helper routes
@@ -1002,9 +1029,11 @@ def test_sql_rendered_ladders_match_column_built_plans(spark):
         # minhash explode path (Column-built original inline)
         lo_mask = F.lit((1 << 30) - 1)
         prime = F.lit(D.MINHASH_PRIME)
-        hashed = sh.select(
-            F.col("doc_id"), F.explode("sh").alias("_sg")
-        ).select(F.col("doc_id"), D.md5_long(F.col("_sg")).alias("_h"))
+        hashed = (
+            sh.select(F.col("doc_id"), F.explode_outer("sh").alias("_sg"))
+            .filter(F.col("_sg").isNotNull())
+            .select(F.col("doc_id"), D.md5_long(F.col("_sg")).alias("_h"))
+        )
         hi = F.shiftright(F.col("_h"), 30)
         lo = F.col("_h").bitwiseAND(lo_mask)
         old_sigs = hashed.groupBy("doc_id").agg(

@@ -252,3 +252,39 @@ def test_launch_conf_wins_over_defaults_and_auto_posture():
     assert conf["ansi"] == "false"
     # an explicit extra_conf still beats the launch conf
     assert conf["extra_shuffle"] == "9"
+
+
+_MASTER_CHILD = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from ominimo_dynamic_data_pipeline_spark import get_spark
+
+spark = get_spark()
+print("MASTER " + spark.sparkContext.master)
+spark.stop()
+"""
+
+
+def _launch_master(submit_args: str | None) -> str:
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "3"}
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    if submit_args is not None:
+        env["PYSPARK_SUBMIT_ARGS"] = submit_args
+    proc = subprocess.run(
+        [sys.executable, "-c", _MASTER_CHILD, str(REPO)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = next(x for x in proc.stdout.splitlines() if x.startswith("MASTER "))
+    return line[len("MASTER "):]
+
+
+def test_launch_master_wins_over_spark_graft_cpus():
+    # a deployment's --master is kept; SPARK_GRAFT_CPUS only sizes the
+    # local harness when the launch names no master (the launcher then
+    # reports its default local[*])
+    assert _launch_master("--master local[2] pyspark-shell") == "local[2]"
+    assert _launch_master(None) == "local[3]"
