@@ -97,17 +97,42 @@ def test_batch_gc_posture_pinned():
     assert _DEFAULTS["spark.cleaner.periodicGC.interval"] == "5min"
 
 
-def test_driver_memory_scales_with_input():
+def _pin_host_ram(monkeypatch, ram_bytes: int) -> None:
+    """Make ``SC_PHYS_PAGES`` report ``ram_bytes`` of physical RAM to
+    ``session``; every other ``sysconf`` name reads the real host."""
+    from ominimo_dynamic_data_pipeline_spark import session
+
+    real_sysconf = os.sysconf
+
+    def fake_sysconf(name):
+        if name == "SC_PHYS_PAGES":
+            return ram_bytes // real_sysconf("SC_PAGE_SIZE")
+        return real_sysconf(name)
+
+    monkeypatch.setattr(session.os, "sysconf", fake_sysconf)
+
+
+def test_driver_memory_scales_with_input(monkeypatch):
     from ominimo_dynamic_data_pipeline_spark.session import _driver_memory_gb
 
-    # base behavior unchanged without an estimate
+    # base behavior unchanged without an estimate, on the real host
+    assert _driver_memory_gb() <= 24
+    # the rule clamps at half of RAM, so the host is pinned at the
+    # measured sf100 harness (125 GB RAM, BENCH_sf100.json
+    # "31 GB data vs 125 GB RAM") instead of read from the machine
+    _pin_host_ram(monkeypatch, 125 * GB)
     assert _driver_memory_gb() <= 24
     # measured wall: 16 GB lineitem-dominated input OOMed the 24g heap
     # mid shuffle-write (q199 sf100) at any width; the measured 45g
-    # (~3x input, see session.py/_driver_memory_gb) clears it
+    # clears it, and the docstring's ~3x input gives exactly that:
+    # ceil(3 * 15_959_453_514 / 1 GiB) = ceil(44.59) = 45
     assert _driver_memory_gb(15_959_453_514) >= 45
     # miniature inputs stay at the 24g base (no pointless giant heaps)
     assert _driver_memory_gb(40 << 20) == _driver_memory_gb()
+    # a 15 GiB host checks the half-of-RAM clamp: the same input gets
+    # 15 / 2 -> 7g, the heap the OS can back, not the 45g it asks for
+    _pin_host_ram(monkeypatch, 15 * GB)
+    assert _driver_memory_gb(15_959_453_514) == 7
 
 
 def test_extra_conf_merges_java_options_instead_of_replacing():
