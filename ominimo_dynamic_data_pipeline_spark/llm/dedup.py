@@ -27,17 +27,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ominimo_dynamic_data_pipeline_spark.llm.text import normalize_text, tokens
+from ominimo_dynamic_data_pipeline_spark.session import persist_intermediate
 
 
 MINHASH_PRIME = 1073741789  # largest prime < 2^30
-
-# Intermediate frames persisted by dedup operators, keyed by operator
-# name.  Each operator keeps at most ONE generation alive: a new call
-# unpersists the previous call's frames first, and release_persisted()
-# drops everything deterministically — so a long-lived session running
-# the operators repeatedly cannot accumulate cached partitions until
-# GC/session teardown (round-5 advice).
-_PERSISTED: dict[str, list[DataFrame]] = {}
 
 
 def _dre():
@@ -54,53 +47,6 @@ def _dre():
     )
 
     return duck_round_expr
-
-
-def _persist_tracked(op: str, *frames: DataFrame):
-    """MEMORY_AND_DISK-persist ``frames`` under the operator's registry
-    slot, releasing the previous call's frames for the same operator.
-
-    The persisted frames back a RETURNED lazy result, so they cannot be
-    unpersisted inside the operator (the caller has not executed the
-    frame yet); one-generation-per-operator bounds the cache instead,
-    and sessions wanting tighter control call release_persisted() after
-    materializing results."""
-    from pyspark import StorageLevel
-
-    for old in _PERSISTED.pop(op, []):
-        try:
-            old.unpersist(blocking=False)
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-    out = [f.persist(StorageLevel.MEMORY_AND_DISK) for f in frames]
-    _PERSISTED[op] = list(out)
-    return out[0] if len(out) == 1 else tuple(out)
-
-
-def persist_tracked(op: str, *frames: DataFrame):
-    """Public form of the one-generation tracked persist: persist
-    ``frames`` MEMORY_AND_DISK under ``op``'s registry slot (releasing
-    the previous generation) — for callers OUTSIDE this module that
-    want the same bounded-cache discipline the dedup operators use.
-    Pair with release_persisted(op) after materializing results."""
-    return _persist_tracked(op, *frames)
-
-
-def release_persisted(op: str | None = None) -> int:
-    """Unpersist intermediate frames cached by dedup operators (all of
-    them, or one operator's) and return how many frames were released.
-    Safe to call at any time; subsequently executing a frame returned by
-    a dedup operator recomputes instead of reading cache."""
-    ops = [op] if op is not None else list(_PERSISTED)
-    n = 0
-    for key in ops:
-        for df in _PERSISTED.pop(key, []):
-            try:
-                df.unpersist(blocking=False)
-            except Exception:  # pragma: no cover - session already stopped
-                pass
-            n += 1
-    return n
 
 
 def md5_long(col: Column, seed: int | None = None) -> Column:
@@ -422,9 +368,8 @@ def expand_member_pairs(
         # The census below is a separate EAGER job over the grouped
         # frame; without a persist the returned frame re-runs the whole
         # upstream pipeline (tokenize + hash + collect_list) a second
-        # time when it executes.  One generation kept per operator;
-        # release_persisted() drops it deterministically.
-        grouped = _persist_tracked("expand_member_pairs", grouped)
+        # time when it executes.
+        grouped = persist_intermediate(grouped)
         hist = [
             (r["n"], r["buckets"])
             for r in grouped.select(F.size(F.col(members_col)).alias("n"))
@@ -638,14 +583,8 @@ def minhash_near_dups(
     of the Jaccard verify join — so the tokenize+shingle work runs once
     instead of three times.  The cached frame is (id, shingle array),
     tiny relative to the corpus; Spark's LRU evicts it when memory is
-    needed.  It is a plain persist, not a tracked one: the cache is keyed
-    by logical plan, so a second identical call in the same session (q49
-    after q26) reuses the first call's frame."""
-    from pyspark import StorageLevel
-
-    sh = shingle_frame(df, id_col, text_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    needed; see session.persist_intermediate for who releases it."""
+    sh = persist_intermediate(shingle_frame(df, id_col, text_col, shingle_n))
     sigs = minhash_signatures(
         df, id_col, text_col, num_hashes, shingle_n, shingles=sh
     )
@@ -763,9 +702,8 @@ def simhash_near_dups(
         # The census below is a separate eager job, so ReusedExchange can
         # never share the signature pipeline with the returned frame —
         # persist the banded signatures once instead of hashing every
-        # token twice (one generation kept per operator;
-        # release_persisted() drops it deterministically).
-        banded = _persist_tracked("simhash_near_dups", banded)
+        # token twice.
+        banded = persist_intermediate(banded)
     pre = banded.groupBy("band", "bits").agg(
         F.array_sort(
             F.collect_list(F.struct(_col(id_col).alias("id"), "sig"))
@@ -921,32 +859,25 @@ def embedding_near_dups(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    bucket_col: str | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs above a cosine threshold.
 
-    Brute-force O(N^2/2) pairs — correct baseline for verification scale.
-    At 100 TB pass ``bucket_col`` (e.g. an LSH bucket or cluster label) to
-    restrict comparisons within buckets, turning the blow-up into
-    sum(|bucket|^2); see similarity.embedding_near_dups_lsh.  Norms/casts are staged
+    Brute-force O(N^2/2) pairs: the reference that the bucketed
+    similarity.embedding_near_dups_lsh (the path that scales, at
+    sum(|bucket|^2) pairs) is tested against.  Norms/casts are staged
     per row (norm_frame) so the pairwise work is one dot product.
     """
-    nf = norm_frame(df, id_col, vec_col, [bucket_col] if bucket_col else None)
+    nf = norm_frame(df, id_col, vec_col)
     a = nf.select(
         _col(id_col).alias("id_a"), F.col("vec_d").alias("va"),
         F.col("nrm").alias("nrm_a"),
-        *( [F.col(bucket_col).alias("bucket_a")] if bucket_col else [] ),
     )
     b = nf.select(
         _col(id_col).alias("id_b"), F.col("vec_d").alias("vb"),
         F.col("nrm").alias("nrm_b"),
-        *( [F.col(bucket_col).alias("bucket_b")] if bucket_col else [] ),
     )
-    cond = F.col("id_a") < F.col("id_b")
-    if bucket_col:
-        cond = cond & (F.col("bucket_a") == F.col("bucket_b"))
     return (
-        a.join(b, cond)
+        a.join(b, F.col("id_a") < F.col("id_b"))
         .select(
             "id_a",
             "id_b",
@@ -1320,10 +1251,11 @@ def incremental_near_dedup(
     the tiny candidate list back to per-side shingle frames; cost stays
     sum over buckets of |batch bucket| x |reference bucket|, with
     ``max_bucket_size`` shedding degenerate buckets per corpus side."""
-    sh_inc, sh_ref = _persist_tracked(
-        "incremental_near_dedup",
-        shingle_frame(incoming, id_col, text_col, shingle_n),
-        shingle_frame(reference, id_col, text_col, shingle_n),
+    sh_inc = persist_intermediate(
+        shingle_frame(incoming, id_col, text_col, shingle_n)
+    )
+    sh_ref = persist_intermediate(
+        shingle_frame(reference, id_col, text_col, shingle_n)
     )
     sig_inc = minhash_signatures(
         incoming, id_col, text_col, num_hashes, shingle_n, shingles=sh_inc
@@ -1455,7 +1387,7 @@ def shingle_join_candidates(
     tagged = posts.withColumn("_df", F.count(F.lit(1)).over(w))
     rare = tagged.filter(F.col("_df") <= max_df)
     if max_pairs is not None:
-        rare = _persist_tracked("shingle_join_candidates", rare)
+        rare = persist_intermediate(rare)
         hist = [
             (r["n"], r["grams"])
             for r in rare.groupBy(F.col("_df").alias("n"))

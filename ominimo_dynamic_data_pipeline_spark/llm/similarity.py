@@ -1463,7 +1463,9 @@ def duck_round_expr(col: Column | str, d: int = 0) -> Column:
     # which also enforces the cheap-argument contract mechanically), so
     # one call_function round trip replaces the whole build.  Plan
     # parity vs the Column-built form is pinned in tests; the Column
-    # form remains as the no-active-session fallback.
+    # form remains as the no-active-session fallback.  The function is
+    # registered on the ACTIVE session: a column built here resolves on
+    # a frame of that session (or of one cloned from it).
     spark = SparkSession.getActiveSession()
     if spark is not None and _ensure_duck_round_fn(spark):
         return F.call_function(
@@ -1506,20 +1508,19 @@ _DUCK_ROUND_BODY = (
     " THEN cast(floor((cast(x as double) * p)) as double) + 1.0D"
     " ELSE cast(floor((cast(x as double) * p)) as double) END END / p"
 )
-_DUCK_ROUND_REGISTERED: set[str] = set()
+# Set on a session in the same call that registers __duck_round there:
+# one conf read per call is the cheapest "registered here?" check, and
+# newSession() inherits neither the marker nor the function.
+_DUCK_ROUND_MARKER = "spark.graft.internal.duckRoundRegistered"
 
 
 def _ensure_duck_round_fn(spark: SparkSession) -> bool:
-    """Register the __duck_round SQL function once per session.  Keyed by
-    the JVM session object's identity hash (a restarted session under the
-    same Python wrapper re-registers).  Returns False when registration
-    fails (e.g. a connect-only surface without SQL-UDF support) so the
+    """Register the __duck_round SQL function on ``spark`` unless that
+    session already holds it.  Lazy, because a caller may bring its own
+    bare session (see __spark_entry__._configure).  Returns False when
+    registration fails (e.g. an engine without SQL-UDF support) so the
     caller falls back to the Column build."""
-    try:
-        key = str(spark._jsparkSession.hashCode())  # type: ignore[union-attr]
-    except Exception:  # pragma: no cover — connect session: no _jsparkSession
-        key = str(id(spark))
-    if key in _DUCK_ROUND_REGISTERED:
+    if spark.conf.get(_DUCK_ROUND_MARKER, None) is not None:
         return True
     try:
         spark.sql(
@@ -1528,7 +1529,7 @@ def _ensure_duck_round_fn(spark: SparkSession) -> bool:
         )
     except Exception:  # pragma: no cover — engines without SQL UDFs
         return False
-    _DUCK_ROUND_REGISTERED.add(key)
+    spark.conf.set(_DUCK_ROUND_MARKER, "true")
     return True
 
 

@@ -537,14 +537,11 @@ def rfm_segments(
 
     from pyspark import inheritable_thread_target
 
-    from ominimo_dynamic_data_pipeline_spark.llm.dedup import (
-        persist_tracked,
-    )
+    from ominimo_dynamic_data_pipeline_spark.session import persist_intermediate
 
-    # one-generation tracked persist (the apriori_prefilter precedent):
-    # the rollup backs a returned lazy frame, so it cannot unpersist
-    # here; the registry bounds it to one generation per operator
-    f = persist_tracked("rfm_segments", f)
+    # persisted in the caller's thread, before the branch pool starts, so
+    # a dataflow compile records it
+    f = persist_intermediate(f)
     specs = [
         ("recency_days", F.asc("recency_days"), "r_bucket"),
         ("freq", F.desc("freq"), "f_bucket"),

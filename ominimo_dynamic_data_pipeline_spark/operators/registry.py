@@ -64,6 +64,9 @@ class CompileContext:
     clock: Column | None = None  # fixed-clock override for determinism
     strict: bool = True
     register_views: bool = True
+    # intermediates the steps' kernels persisted (session.persist_intermediate);
+    # the run, or a failed compile, unpersists them
+    persisted: list[DataFrame] = field(default_factory=list)
 
     def get(self, name: str) -> DataFrame:
         if name not in self.frames:

@@ -9,17 +9,18 @@ Load-bearing semantics pinned by tests (tests/test_validator.py):
     ``notNull``/``notEmpty`` assert presence.  ``isNumeric``/``isInteger``
     additionally require non-null.
   * Error labels embed the parsed float (``min:18`` -> ``..._at_least_18.0``).
-  * ``dateBefore``/``dateAfter`` are INCLUSIVE (<= / >=) despite the names,
-    and pass when either side is null or only one side parses... no: pass when
-    either side is *null*; fail when both non-null and either fails to parse.
+  * ``dateBefore``/``dateAfter`` pass when either side is null; otherwise
+    both sides must parse, and the comparison is INCLUSIVE (<= / >=)
+    despite the names.
   * Unknown checks: the reference silently passes them with an
     ``unknown_validation_*`` label (``validator.py:106-108``); we hard-error
     by default and reproduce the legacy behavior under ``strict=False``.
 
 Scale notes: validation is a single narrow projection — no shuffle, fully
 whole-stage-codegen'd, safe at any scale.  The OK/KO split is two filters
-over one tagged frame; callers that consume both should ``cache()`` the
-tagged frame (see ``ValidationResult.tagged``).
+over one tagged frame.  A dataflow run that reads both caches the
+validate step's INPUT, not the tagged frame (``pipeline.run_dataflow``);
+caching the tagged frame measured no faster at 2M rows.
 """
 
 from __future__ import annotations

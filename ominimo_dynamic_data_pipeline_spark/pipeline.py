@@ -34,11 +34,17 @@ submitted together from one thread pool as wide as the number of
 actions; each thread target is wrapped in ``inheritable_thread_target``,
 so the caller's job group and tags reach every job.
 
+The compile owns the intermediates its kernels persist
+(``session.persist_intermediate``, e.g. a dedup step's shingle frame):
+they are recorded on ``CompileContext.persisted``, and the run releases
+them with its own caches.  A compile that raises releases what it had
+persisted before re-raising.
+
 Failure contract: the run waits for every submitted action, unpersists
-its caches, then re-raises the first failing action's error (in
-submission order).  No Spark job of the run is left running.  Sinks that
-finished keep their output (writes are not staged), and no stats sidecar
-is written.
+its caches and the frames its compile persisted, then re-raises the
+first failing action's error (in submission order).  No Spark job of the
+run is left running.  Sinks that finished keep their output (writes are
+not staged), and no stats sidecar is written.
 """
 
 from __future__ import annotations
@@ -73,6 +79,7 @@ from ominimo_dynamic_data_pipeline_spark.operators.stats import (
     observe_validation_stats,
     write_stats_sidecar,
 )
+from ominimo_dynamic_data_pipeline_spark.session import recording_persists
 
 
 @dataclass
@@ -118,8 +125,18 @@ def compile_dataflow(
     ctx = CompileContext(spark=spark, clock=clock, strict=strict)
     for name, df in read_sources(spark, flow).items():
         ctx.put(name, df)
-    apply_transformations(ctx, flow)
+    try:
+        with recording_persists(ctx.persisted):
+            apply_transformations(ctx, flow)
+    except BaseException:
+        _unpersist(ctx.persisted)
+        raise
     return CompiledDataflow(dataflow=flow, ctx=ctx)
+
+
+def _unpersist(frames: Sequence[DataFrame]) -> None:
+    for df in frames:
+        df.unpersist()
 
 
 def _foldable_validation(
@@ -188,6 +205,18 @@ def run_dataflow(
 ) -> RunResult:
     """Execute the deferred actions of a compiled dataflow (see the
     module docstring for which actions run and the failure contract)."""
+    try:
+        return _run(compiled, write, verbose, stats_clock)
+    finally:
+        _unpersist(compiled.ctx.persisted)
+
+
+def _run(
+    compiled: CompiledDataflow,
+    write: bool,
+    verbose: bool,
+    stats_clock: Callable[[], datetime],
+) -> RunResult:
     ctx = compiled.ctx
     result = RunResult(frames=ctx.frames)
     sinks = list(compiled.dataflow.get("sinks", []) or [])
@@ -259,17 +288,7 @@ def run_dataflow(
             ctx.frames[name].show(truncate=False)
         outcomes.extend(_run_together(ctx.spark, actions))
     finally:
-        for df in shared:
-            df.unpersist()
-        # Dedup steps persist intermediates under the one-generation-per-
-        # operator registry; a dataflow run is their natural release
-        # boundary (re-executing a returned frame afterwards recomputes
-        # instead of reading cache — correct, just cold).
-        from ominimo_dynamic_data_pipeline_spark.llm.dedup import (
-            release_persisted,
-        )
-
-        release_persisted()
+        _unpersist(shared)
 
     for req, fields_doc, validation_doc in docs:
         doc = fields_doc()

@@ -24,6 +24,7 @@ from ominimo_dynamic_data_pipeline_spark.queries.tables import (
     exact_str_double,
     load_table,
 )
+from ominimo_dynamic_data_pipeline_spark.session import persist_intermediate
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -952,11 +953,6 @@ def _apriori_prefilter(li: DataFrame, support: int) -> DataFrame:
     scan; on real skewed corpora (catalog long tails) it prunes the
     quadratic expansion instead.
     """
-    from ominimo_dynamic_data_pipeline_spark.llm.dedup import (
-        _persist_tracked,
-        release_persisted,
-    )
-
     # Persist the CENSUS itself (one row per part — tiny next to
     # lineitem): the count below materializes it, and BOTH prune
     # branches then derive from the cached frame, so neither re-runs
@@ -964,17 +960,12 @@ def _apriori_prefilter(li: DataFrame, support: int) -> DataFrame:
     # joined an unpersisted `freq` — recomputing the census — while a
     # persisted `infrequent` frame backed nothing in the returned
     # plan.)
-    freq = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n"))
-    # Persisted under the dedup registry slot (released like the other
-    # operator intermediates) — the returned lazy result reads it.
-    _persist_tracked("apriori_prefilter", freq)
-    try:
-        n_infrequent = freq.filter(F.col("_n") < support).count()
-    except Exception:
-        release_persisted("apriori_prefilter")
-        raise
+    freq = persist_intermediate(
+        li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n"))
+    )
+    n_infrequent = freq.filter(F.col("_n") < support).count()
     if n_infrequent == 0:
-        release_persisted("apriori_prefilter")
+        freq.unpersist()
         return li
     if n_infrequent <= _APRIORI_BROADCAST_MAX:
         # small tail: broadcast anti-join, no lineitem exchange

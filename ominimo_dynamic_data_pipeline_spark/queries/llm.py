@@ -26,6 +26,7 @@ from ominimo_dynamic_data_pipeline_spark.queries.tables import (
     exact_str_double,
     load_table,
 )
+from ominimo_dynamic_data_pipeline_spark.session import persist_intermediate
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -3974,12 +3975,8 @@ def q167_minhash_recall_calibration(
     )
     # One persisted tokenize pass shared by truth and signatures; the
     # truth uses the inverted-index shape (see the block comment).  The
-    # cache is slice-sized (<= 500 docs) and one-generation-tracked; a
-    # session wanting it gone immediately calls
-    # D.release_persisted("q167_calibration") after materializing.
-    sh = D.persist_tracked(
-        "q167_calibration", D.shingle_frame(sample)
-    )
+    # cache is slice-sized (<= 500 docs).
+    sh = persist_intermediate(D.shingle_frame(sample))
     sigs = D.minhash_signatures(sample, shingles=sh)
     caught = D.minhash_band_candidates(
         sigs, max_bucket_size=MINHASH_MAX_BUCKET

@@ -18,8 +18,11 @@ scale-aware configuration:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -372,3 +375,45 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+# The persisted-frame list of the dataflow compile in progress in this
+# context (bound by pipeline.compile_dataflow; None everywhere else).
+_compile_persisted: ContextVar[list[DataFrame] | None] = ContextVar(
+    "compile_persisted", default=None
+)
+
+
+@contextmanager
+def recording_persists(frames: list[DataFrame]) -> Iterator[None]:
+    """Append every frame that ``persist_intermediate`` persists inside
+    the block, in this context, to ``frames``.  Pool threads do not
+    inherit the binding; a kernel that persists in a worker thread must
+    be submitted through ``contextvars.copy_context().run``."""
+    token = _compile_persisted.set(frames)
+    try:
+        yield
+    finally:
+        _compile_persisted.reset(token)
+
+
+def persist_intermediate(df: DataFrame) -> DataFrame:
+    """Persist a kernel intermediate MEMORY_AND_DISK and return it.
+
+    Inside a dataflow compile the frame joins that compile's
+    ``CompileContext.persisted`` list, and ``run_dataflow`` (or the
+    failed compile) unpersists it; a plan someone else already cached is
+    not recorded, so a run never frees a cache it did not create.
+    Outside a compile (catalog queries, direct kernel calls) it is a
+    plain Spark persist that lives until the caller unpersists it or
+    clears the session's cache.  Spark keys the cache by logical plan,
+    so an identical later call reuses the frame (q49 after q26 reads
+    q26's shingle frame), and nothing bounds how many distinct frames
+    stay cached: a session that runs kernels over many distinct inputs
+    calls ``spark.catalog.clearCache()`` between them."""
+    from pyspark import StorageLevel
+
+    owner = _compile_persisted.get()
+    if owner is not None and df.storageLevel == StorageLevel.NONE:
+        owner.append(df)
+    return df.persist(StorageLevel.MEMORY_AND_DISK)

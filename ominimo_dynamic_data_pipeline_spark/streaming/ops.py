@@ -951,72 +951,6 @@ def stateful_funnel(events: DataFrame, horizon_us: int) -> DataFrame:
     )
 
 
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The Spark 4-native version of stateful_user_totals:
-    ``transformWithStateInPandas`` with a ``StatefulProcessor`` and typed
-    ValueState.  Compared to applyInPandasWithState this is the API that
-    carries forward — composable state variables (value/list/map), state
-    TTL, and timers — and it requires the RocksDB state-store provider,
-    which is also the right provider for 100 TB state (incremental
-    checkpointing, spill-to-disk instead of executor-heap state).
-
-    Emits one updated (user_id, n_events, value_sum, batches) row per
-    user per micro-batch; on a static frame it degrades to the one-shot
-    groupBy like its sibling, which the batch-equivalence test exploits.
-
-    Optional-dependency boundary: the TWS driver-worker protocol needs
-    ``protobuf`` (absent in this container); the equivalence test
-    importorskips on it, and applyInPandasWithState
-    (stateful_user_totals) remains the dependency-free fallback.
-    """
-    if not events.isStreaming:
-        return events.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("value_sum"),
-            F.lit(1).cast("bigint").alias("batches"),
-        )
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", USER_TOTALS_STATE
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total, batches = (
-                self._state.get() if self._state.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            batches += 1
-            self._state.update((n, total, batches))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "value_sum": [total],
-                    "batches": [batches],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        UserTotals(),
-        outputStructType=USER_TOTALS_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def session_transcripts(
     events: DataFrame,
     gap: str = "5 minutes",

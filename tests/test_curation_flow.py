@@ -863,14 +863,15 @@ def test_train_split_and_shard_example_dataflow(spark):
 
 
 def test_run_dataflow_releases_dedup_operator_caches(spark):
-    """After run_dataflow returns, the dedup operators' persisted
-    intermediates are released (the one-generation registry is empty) —
-    a scheduled pipeline cannot leak cached partitions across runs."""
+    """After run_dataflow returns, the intermediates its compile's dedup
+    steps persisted are released — a scheduled pipeline cannot leak
+    cached partitions across runs."""
     import json
     from pathlib import Path
 
+    from pyspark import StorageLevel
+
     from ominimo_dynamic_data_pipeline_spark.config import select_dataflow
-    from ominimo_dynamic_data_pipeline_spark.llm import dedup as D
     from ominimo_dynamic_data_pipeline_spark.pipeline import (
         compile_dataflow,
         run_dataflow,
@@ -884,7 +885,8 @@ def test_run_dataflow_releases_dedup_operator_caches(spark):
     compiled = compile_dataflow(spark, flow)
     run_dataflow(compiled, write=False)
     compiled.frames["manifest"].count()
-    assert D._PERSISTED == {}
+    assert compiled.ctx.persisted
+    assert all(df.storageLevel == StorageLevel.NONE for df in compiled.ctx.persisted)
 
 
 def test_importance_curriculum_example_dataflow(spark):

@@ -1319,35 +1319,22 @@ def test_temperature_sample_max_groups_guard(spark):
     assert ok.count() > 0
 
 
-def test_dedup_persist_registry_bounds_cache(spark):
-    """Repeated dedup-operator calls in a long-lived session must not
-    accumulate cached partitions: each operator keeps ONE generation of
-    persisted intermediates, and release_persisted() drops them all
-    (round-5 advice)."""
+def test_kernel_persist_outside_a_run_is_plan_keyed(spark):
+    """Outside a dataflow run a kernel persist is a plain Spark persist:
+    two identical minhash_near_dups calls share one cached shingle frame
+    (q49 after q26), which lives until the caller unpersists it."""
     from ominimo_dynamic_data_pipeline_spark.llm import dedup as D
 
-    rows = [(i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(30)]
+    rows = [(i, f"alpha beta gamma delta {i % 7} epsilon zeta") for i in range(30)]
     df = spark.createDataFrame(rows, schema="doc_id bigint, text string")
-    D.release_persisted()
-    out1 = D.incremental_near_dedup(df, df, max_bucket_size=50)
-    gen1 = list(D._PERSISTED.get("incremental_near_dedup", []))
-    assert len(gen1) == 2  # sh_inc + sh_ref, one generation
-    out1.count()
-    # a DIFFERENT input frame: storageLevel is looked up by logical plan,
-    # so a same-plan second call would mask the release of generation 1
-    df2 = df.filter(F.col("doc_id") < 20)
-    out2 = D.incremental_near_dedup(df2, df2, max_bucket_size=50)
-    gen2 = list(D._PERSISTED.get("incremental_near_dedup", []))
-    assert len(gen2) == 2  # still one generation, not four
-    assert all(g1 is not g2 for g1 in gen1 for g2 in gen2)
-    for g in gen1:  # previous generation was released
-        assert g.storageLevel.useMemory is False
-    out2.count()
-    released = D.release_persisted("incremental_near_dedup")
-    assert released == 2
-    assert "incremental_near_dedup" not in D._PERSISTED
-    # release-all path sweeps any other operator slots too
-    D.release_persisted()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    first = D.minhash_near_dups(df, max_bucket_size=50).count()
+    assert persistent().size() == before + 1
+    assert D.minhash_near_dups(df, max_bucket_size=50).count() == first
+    assert persistent().size() == before + 1
+    D.shingle_frame(df).unpersist()
+    assert persistent().size() == before
 
 
 def test_incremental_near_dedup_no_forced_broadcast(spark):
@@ -1356,7 +1343,6 @@ def test_incremental_near_dedup_no_forced_broadcast(spark):
     batch-sized), so sizing is AQE's call (round-5 advice)."""
     from ominimo_dynamic_data_pipeline_spark.llm.dedup import (
         incremental_near_dedup,
-        release_persisted,
     )
 
     rows = [(i, f"one two three four five {i}") for i in range(10)]
@@ -1367,7 +1353,6 @@ def test_incremental_near_dedup_no_forced_broadcast(spark):
     # the only remaining broadcast hints are the shingle-frame internals'
     # (none today); the victims join itself must carry no hint
     assert not any("broadcast" in h.lower() for h in hints), hints
-    release_persisted()
 
 
 def test_unicode_normalize_hostile_fixture_all_forms(spark):

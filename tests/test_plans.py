@@ -986,6 +986,30 @@ def test_duck_round_sql_fn_bit_parity(spark):
         assert got == want, (d, list(zip(vals, got, want)))
 
 
+def test_duck_round_registers_on_a_new_active_session(spark):
+    # newSession() shares the SparkContext but not the temporary
+    # functions: once it is the active session, duck_round_expr must
+    # register __duck_round there before its columns can resolve.
+    from pyspark.sql import SparkSession
+
+    from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
+        duck_round_expr,
+    )
+
+    jsession = spark._jvm.SparkSession
+    fresh = spark.newSession()
+    try:
+        jsession.setActiveSession(fresh._jsparkSession)
+        SparkSession._activeSession = fresh
+        assert SparkSession.getActiveSession() is fresh
+        df = fresh.createDataFrame([(1.25,), (-2.5,)], schema="v double")
+        got = [r.r for r in df.select(duck_round_expr("v", 1).alias("r")).collect()]
+        assert got == [1.3, -2.5]
+    finally:
+        jsession.setActiveSession(spark._jsparkSession)
+        SparkSession._activeSession = spark
+
+
 def test_sql_rendered_ladders_match_column_built_plans(spark):
     # Round-13 construction-latency rewrite: the minhash/simhash/band
     # expression ladders are rendered as SQL strings (one F.expr parse

@@ -174,15 +174,23 @@ def test_failed_sink_waits_for_all_actions_and_releases_caches(spark, tmp_path):
             },
         },
     }
+    # a persisting kernel step whose pairs are written beside the failure
+    pairs = {
+        "name": "pairs",
+        "type": "near_dup_pairs",
+        "params": {"input": "rows", "id_col": "id", "text_col": "code"},
+    }
     flow = _flow(
         tmp_path,
-        extra_steps=[boom],
+        extra_steps=[boom, pairs],
         sinks=[
             {"input": "ok", "paths": [str(tmp_path / "out_ok")], "format": "JSON"},
             {"input": "boom", "paths": [str(tmp_path / "out_boom")], "format": "JSON"},
+            {"input": "pairs", "paths": [str(tmp_path / "out_pairs")], "format": "JSON"},
         ],
     )
     compiled = compile_dataflow(spark, flow)
+    assert compiled.ctx.persisted
     with pytest.raises(Exception, match="injected sink failure"):
         run_dataflow(compiled, write=True)
 
@@ -190,9 +198,148 @@ def test_failed_sink_waits_for_all_actions_and_releases_caches(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert list(sc.statusTracker().getActiveJobsIds()) == []
     assert all(_not_cached(df) for df in compiled.frames.values())
+    assert all(_not_cached(df) for df in compiled.ctx.persisted)
     # partial contract: the healthy sink finished, no stats sidecar
     assert spark.read.json(str(tmp_path / "out_ok")).count() == 2
     assert not (tmp_path / "stats").exists()
+
+
+@pytest.fixture
+def documents(sf_dir) -> str:
+    """The sf0.01 documents table, which has near-duplicate texts."""
+    path = Path(sf_dir).with_name("sf0.01") / "documents.parquet"
+    if not path.exists():
+        pytest.skip("sf0.01 testdata missing")
+    return str(path)
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _docs_flow(documents: str, name: str, steps, sinks=()) -> dict:
+    return {
+        "name": name,
+        "sources": [{"name": "docs", "path": documents, "format": "PARQUET"}],
+        "transformations": steps,
+        "sinks": list(sinks),
+    }
+
+
+def _slice(name: str, condition: str) -> dict:
+    return {
+        "name": name,
+        "type": "filter",
+        "params": {"input": "docs", "condition": condition},
+    }
+
+
+def test_dataflow_runs_release_the_frames_their_kernels_persisted(spark, tmp_path, documents):
+    """Each near_dedup run materializes its shingle frame and leaves the
+    session with as many persistent RDDs as it found."""
+    for k in range(3):
+        flow = _docs_flow(
+            documents,
+            f"near-dedup-{k}",
+            [
+                _slice("slice", f"doc_id % 3 = {k}"),
+                {"name": "deduped", "type": "near_dedup", "params": {"input": "slice"}},
+            ],
+            [{"input": "deduped", "paths": [str(tmp_path / f"out{k}")], "format": "JSON"}],
+        )
+        before = _persistent_rdds(spark)
+        compiled = compile_dataflow(spark, flow)
+        run_dataflow(compiled, write=True)
+        assert _persistent_rdds(spark) == before
+        assert len(compiled.ctx.persisted) == 1
+
+
+def test_one_run_keeps_the_frames_another_compile_persisted(spark, tmp_path, documents):
+    from pyspark import StorageLevel
+
+    flow_b = _docs_flow(
+        documents,
+        "incremental-near-dedup",
+        [
+            _slice("batch", "doc_id % 2 = 0"),
+            _slice("corpus", "doc_id % 2 = 1"),
+            {
+                "name": "fresh",
+                "type": "incremental_near_dedup",
+                "params": {"input": "batch", "reference": "corpus"},
+            },
+        ],
+        [{"input": "fresh", "paths": [str(tmp_path / "fresh")], "format": "JSON"}],
+    )
+    compiled_b = compile_dataflow(spark, flow_b)
+    frames_b = compiled_b.ctx.persisted
+    assert len(frames_b) == 2
+    compiled_a = compile_dataflow(spark, _docs_flow(documents, "unrelated", []))
+    run_dataflow(compiled_a, write=False)
+    assert all(df.storageLevel == StorageLevel.MEMORY_AND_DISK for df in frames_b)
+    run_dataflow(compiled_b, write=True)
+    assert all(_not_cached(df) for df in frames_b)
+
+
+def test_a_run_leaves_the_caches_it_did_not_create(spark, tmp_path):
+    """A compile whose kernel finds its intermediate already cached by
+    another owner does not record it, so its run leaves it cached."""
+    pairs = {
+        "name": "pairs",
+        "type": "near_dup_pairs",
+        "params": {"input": "rows", "id_col": "id", "text_col": "code"},
+    }
+    flow = _flow(tmp_path, extra_steps=[pairs])
+    first = compile_dataflow(spark, flow)
+    second = compile_dataflow(spark, flow)
+    assert len(first.ctx.persisted) == 1
+    assert second.ctx.persisted == []
+    run_dataflow(second, write=True)
+    assert not _not_cached(first.ctx.persisted[0])
+    run_dataflow(first, write=False)
+    assert _not_cached(first.ctx.persisted[0])
+
+
+def test_failed_compile_releases_what_it_persisted(spark, tmp_path, monkeypatch):
+    """rfm_segments persists its per-user rollup and materializes it at
+    compile (its NTILE census jobs); a later step that fails leaves no
+    cache behind."""
+    from ominimo_dynamic_data_pipeline_spark import session
+
+    persisted = []
+    persist = session.persist_intermediate
+
+    def spy(df):
+        persisted.append(persist(df))
+        return persisted[-1]
+
+    monkeypatch.setattr(session, "persist_intermediate", spy)
+    rows = [
+        {"user": u, "ts": f"2024-01-{d:02d} 00:00:00", "v": u * d}
+        for u in range(1, 7)
+        for d in range(1, 1 + u)
+    ]
+    flow = {
+        "name": "rfm-then-fail",
+        "sources": [{"name": "events", "path": _source(tmp_path, rows), "format": "JSON"}],
+        "transformations": [
+            {
+                "name": "rfm",
+                "type": "rfm_segments",
+                "params": {"input": "events", "user_col": "user", "ts_col": "ts", "value_col": "v"},
+            },
+            {
+                "name": "broken",
+                "type": "filter",
+                "params": {"input": "rfm", "condition": "no_such_column > 0"},
+            },
+        ],
+        "sinks": [],
+    }
+    with pytest.raises(Exception, match="no_such_column"):
+        compile_dataflow(spark, flow)
+    assert len(persisted) == 1
+    assert _not_cached(persisted[0])
 
 
 def test_sinks_sharing_a_path_keep_declaration_order(spark, tmp_path):

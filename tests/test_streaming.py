@@ -439,63 +439,6 @@ def test_rocksdb_state_store_batch_equivalence(spark, static_events, stream_even
             spark.conf.set(key, prev)
 
 
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """The Spark 4 StatefulProcessor path (transformWithStateInPandas +
-    typed ValueState, RocksDB provider required) must reproduce the
-    applyInPandasWithState totals and the static batch aggregate.
-    Requires protobuf (the TWS driver-worker protocol dependency, absent
-    in this container) — optional-dependency gate like the Pillow path."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from ominimo_dynamic_data_pipeline_spark.queries.tables import load_table
-    from ominimo_dynamic_data_pipeline_spark.streaming import ops
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = ops.stateful_user_totals_tws(
-            ops.read_events_stream(spark, sf_dir)
-        )
-        out = ops.run_to_completion(
-            stream, "user_totals_tws", output_mode="update"
-        )
-        got = {
-            r["user_id"]: r
-            for r in out.groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("value_sum").alias("value_sum"),
-            )
-            .collect()
-        }
-        batch = {
-            r["user_id"]: r
-            for r in load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("value").alias("value_sum"),
-            )
-            .collect()
-        }
-        assert set(got) == set(batch)
-        for uid in got:
-            assert got[uid]["n_events"] == batch[uid]["n_events"]
-            assert abs(got[uid]["value_sum"] - batch[uid]["value_sum"]) < 1e-6
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
-
-
 def test_sized_state_partitions_directory_dataset_and_conf_guard(
     spark, sf_dir, tmp_path
 ):

@@ -169,6 +169,9 @@ def main() -> int:
                 )
 
                 n = cleanup_scratch(spark)
+                # kernel persists outside a dataflow run live until the
+                # session clears them
+                spark.catalog.clearCache()
                 print(
                     json.dumps({"cleanup_between": name, "roots": n}),
                     flush=True,
